@@ -400,6 +400,12 @@ def main() -> None:
         "contended": contended,
         "queries": {n: timings[n] for n in FROZEN_R1_SUBSET},
         "full_record": os.path.basename(local_path),
+        # the parallelism this record actually resolved to: the session
+        # runs local[$SPARK_GRAFT_CPUS] (default 32) whatever the host,
+        # so the host's usable cores sit next to it
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+        "spark.master": spark.sparkContext.master,
+        "nproc": len(os.sched_getaffinity(0)),
     }
     summary_line = json.dumps(summary)
     assert len(summary_line) < 1024, len(summary_line)

@@ -469,14 +469,15 @@ def connected_components_incremental(
 
     The historical pair graph is never rescanned: each old component is
     collapsed to its spanning STAR (node → comp edges — stars preserve
-    exactly the connectivity CC needs), and min-label propagation runs on
-    star ∪ new edges. Cost ∝ |labeled nodes| + |new edges|, with round
-    count bounded by the contracted graph's diameter (stars have diameter
-    2; a new batch chaining k old components needs ~k hops, not the
-    original graph's) — at 100 TB this is the difference between a
-    daily-batch fold and re-clustering the entire corpus. Output keeps
-    the min-node-id component key, so labels stay stable across folds
-    unless a merge genuinely relabels them.
+    exactly the connectivity CC needs), and ``connected_components``'
+    alternating large-star/small-star rounds run on star ∪ new edges.
+    Cost ∝ |labeled nodes| + |new edges| per round, and the round count
+    is the O(log) of that contracted graph (stars are already fixed
+    points; only the old components a batch chains together still
+    contract) — at 100 TB this is the difference between a daily-batch
+    fold and re-clustering the entire corpus. Output keeps the min-node-id component key, so
+    labels stay stable across folds unless a merge genuinely relabels
+    them.
     """
     stars = labels.filter(F.col("node") != F.col("comp")).select(
         F.col("node").alias(src), F.col("comp").alias(dst)

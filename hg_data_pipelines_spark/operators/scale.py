@@ -19,7 +19,7 @@ AQE alone doesn't cover:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -573,105 +573,184 @@ def quantile_bucket_assign(
     return df.withColumn(out_col, bucket.cast("int"))
 
 
+# --- exact order-statistic selection (scan-bounded, ≤ 2 Spark jobs) ------
+#
+# One mechanism behind exact_quantiles_twopass (discrete ranks),
+# percentile_cont_exact(_grouped) (interpolated positions) and, through
+# them, quantile_bucket_assign: histogram refinement. A VALUE-INDEPENDENT
+# monotone bucketing (sign-split log2 ladder, ~1024 buckets per octave)
+# lets ONE aggregation pass deliver the per-(group, bucket)
+# (count, min, max) histogram — no extent pass, no broadcast-built join;
+# the driver walks it to each needed rank, and a second pass (the pick)
+# runs only when some rank sits strictly inside a multi-valued bucket.
+
+_LOG_BUCKETS_PER_OCTAVE = 1024
+# clears ±max|floor(1024·log2(|x|))| (~1.1e6) for every finite double, so
+# negative / zero / positive ids can never interleave
+_LOG_BUCKET_OFFSET = 2_200_000
+
+
+def _log_bucket(col):
+    """Monotone double → bigint bucket id, no extent needed.
+
+    Weakly monotone by construction: log2 is semi-monotonic (java.lang.Math
+    contract), ×1024 is an exact power-of-two scaling, floor is monotone,
+    and the sign split keeps negatives < 0-bucket < positives. Monotonicity
+    is ALL refinement needs — each bucket is a contiguous value range, so
+    exact rank arithmetic over bucket counts stays exact. Resolution is
+    ~0.07 % of the value per bucket (2^(1/1024) spacing), and finer near
+    zero (where MAD deviations cluster). NULL maps to a NULL bucket; NaN
+    is nulled by the caller (divergence from F.percentile, which sorts NaN
+    last — documented); non-finite values are outside the contract.
+    """
+    scaled = lambda c: F.floor(F.log2(c) * _LOG_BUCKETS_PER_OCTAVE)  # noqa: E731
+    return (
+        F.when(col == 0, F.lit(0))
+        .when(col > 0, F.lit(_LOG_BUCKET_OFFSET) + scaled(col))
+        .otherwise(F.lit(-_LOG_BUCKET_OFFSET) - scaled(-col))
+        .cast("long")
+    )
+
+
+def _walk_histogram(hist: dict, need: dict) -> tuple[dict, list]:
+    """Driver-side rank walk over a monotone bucket histogram.
+
+    ``hist`` maps group → [(bucket, count, min, max)] (any order; bucket
+    ids only need to be monotone in the value), ``need`` maps group → the
+    1-based ranks to select. A rank landing on a bucket edge (offset 1 or
+    offset count) or in a single-valued bucket resolves from the bucket's
+    min/max; every other rank comes back as ``(g, bucket, rank, offset)``
+    — the offset-th smallest value inside that bucket. Returns
+    ({g: {rank: value}}, unresolved).
+    """
+    vals: dict = {}
+    unresolved: list = []
+    for g, ranks in need.items():
+        buckets = sorted(hist[g])
+        vals[g] = {}
+        cum, i = 0, 0
+        for k in sorted(set(ranks)):
+            while i < len(buckets):
+                b, c, bmin, bmax = buckets[i]
+                if cum + c >= k:
+                    off = k - cum
+                    if bmin == bmax or off == 1:
+                        vals[g][k] = float(bmin)
+                    elif off == c:
+                        vals[g][k] = float(bmax)
+                    else:
+                        unresolved.append((g, b, k, off))
+                    break
+                cum += c
+                i += 1
+    return vals, unresolved
+
+
+def _select_order_stats(
+    df: DataFrame, group_col: str, value_col: str, ranks_of
+) -> dict:
+    """Each group's order statistics by 1-based rank, in ≤ 2 Spark jobs:
+    ``ranks_of(n)`` names the ranks a group of ``n`` non-null values
+    needs. Returns {group: (n, {rank: value})}; a group whose values are
+    all NULL/NaN is PRESENT with n = 0 and no values (the NULL row the
+    F.percentile aggregate emits). NaN counts as NULL.
+
+    Contract: ``group_col`` is low-cardinality — driver state is
+    |groups| × populated buckets (≤ a few thousand per group for any
+    realistic dynamic range); high-cardinality keys belong to A27.
+    """
+    from pyspark.sql import Window
+
+    x = F.col(value_col).cast("double")
+    v = df.select(
+        F.col(group_col).alias("g"),
+        F.when(F.isnan(x), None).otherwise(x).alias("x"),
+    )
+    # JOB 1 — the only unconditional one: per-(group, log-bucket)
+    # (count, min, max), one map-combinable aggregation. count(x) skips
+    # NULLs, so an all-NULL group still reports (as n = 0); group sizes
+    # fall out as bucket-count sums.
+    hist: dict = {}
+    for r in (
+        v.groupBy("g", _log_bucket(F.col("x")).alias("b"))
+        .agg(
+            F.count("x").alias("c"),
+            F.min("x").alias("bmin"),
+            F.max("x").alias("bmax"),
+        )
+        .collect()
+    ):
+        buckets = hist.setdefault(r["g"], [])
+        if r["b"] is not None:
+            buckets.append((r["b"], r["c"], r["bmin"], r["bmax"]))
+    sizes = {g: sum(c for _b, c, _lo, _hi in bs) for g, bs in hist.items()}
+    vals, unresolved = _walk_histogram(
+        hist, {g: ranks_of(n) for g, n in sizes.items() if n}
+    )
+    if unresolved:
+        # JOB 2 — target-bucket rows are selected by LITERAL (g, b)
+        # predicates and matched to their (rank, offset) via an exploded
+        # literal struct array — no broadcast exchange, no createDataFrame
+        # — then a per-(g, rank) window picks the offset-th value of the
+        # ~n/buckets-sized slice. The bucket id is materialized once per
+        # row: codegen does not share the log2 subtree across the
+        # when-chain's branches (measured ~+0.8 s at 600k rows × 15).
+        by_gb: dict = {}
+        for g, b, k, off in unresolved:
+            by_gb.setdefault((g, b), []).append((k, off))
+        arr = F.array().cast("array<struct<k:bigint,off:bigint>>")
+        for (g, b), kos in by_gb.items():
+            cond = F.col("g").eqNullSafe(F.lit(g)) & (F.col("_b") == F.lit(b))
+            arr = F.when(
+                cond,
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(k).cast("bigint").alias("k"),
+                            F.lit(off).cast("bigint").alias("off"),
+                        )
+                        for k, off in kos
+                    ]
+                ),
+            ).otherwise(arr)
+        w = Window.partitionBy("g", "t.k").orderBy("x")
+        picked = (
+            v.withColumn("_b", _log_bucket(F.col("x")))
+            .select("g", "x", F.explode(arr).alias("t"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == F.col("t.off"))
+            .select("g", F.col("t.k").alias("k"), "x")
+        )
+        for r in picked.collect():
+            vals[r["g"]][int(r["k"])] = float(r["x"])
+    return {g: (n, vals.get(g, {})) for g, n in sizes.items()}
+
+
 def exact_quantiles_twopass(
     df: DataFrame,
     group_col: str,
     value_col: str,
     quantiles: list[float],
-    n_buckets: int = 1024,
 ) -> DataFrame:
     """EXACT discrete quantiles (the value at rank ``ceil(q*n)``) per
     group WITHOUT a global sort — the scan-bounded scale path next to
     ``F.percentile`` (one sort-based aggregate) and A27's mergeable
     summaries (bounded error).
 
-    Histogram refinement, the classic two-pass selection algorithm:
-
-    1. one aggregate pass → per-group extents (lo/hi/n);
-    2. one aggregate pass → per-group fixed-width bucket counts; the
-       (|groups| × n_buckets)-bounded histogram is collected and, per
-       (group, q), the driver locates the TARGET bucket and the rank
-       offset within it (bucket assignment is monotone in the value, so
-       exact rank arithmetic survives float boundary jitter);
-    3. one filtered pass keeps only rows in target buckets (~n/n_buckets
-       per quantile) and a per-(group, q) window picks the offset-th
-       value.
-
-    At 100 TB this is two column scans + a window over a bucket-sized
-    slice, versus shuffling the full relation into a per-group sort.
-    Contract: ``group_col`` must be low-cardinality (the collected
-    histogram is groups × populated buckets); high-cardinality keys
-    belong to A27. NaN values are excluded (same pinned boundary as
-    ``percentile_cont_exact``).
-
-    r13: the extent pass is gone — the bucketing is the same
-    value-independent monotone log2 ladder the percentile selection
-    uses, so ONE aggregation job delivers per-(group, bucket)
-    (count, min, max) and group sizes fall out as count sums; targets
-    embed as literal predicates + an exploded literal struct array (no
-    broadcast exchange, no createDataFrame). One driver job per call
-    (was two collects + two broadcast-built joins in the returned plan).
+    The ranks come from ``_select_order_stats`` (≤ 2 driver jobs: the
+    log-bucket histogram, plus the pick when a rank falls inside a
+    multi-valued bucket); the result is a local relation of the picked
+    values, one row per group, columns ``group_col`` (its original field)
+    and one double column per quantile (``p50``, ``p100``, ``p12_5``).
+    At 100 TB the full relation is only scanned, never sorted or
+    range-shuffled. NaN counts as NULL; a group with no non-null value
+    gets NULL quantiles. Low-cardinality ``group_col`` only (see
+    ``_select_order_stats``).
     """
     import math
 
-    from pyspark.sql import Window
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    v = df.select(
-        F.col(group_col).alias("g"),
-        F.col(value_col).cast("double").alias("x"),
-    ).filter(F.col("x").isNotNull() & ~F.isnan(F.col("x")))
-    bcol = _log_bucket(F.col("x"))
-    hist: dict = {}
-    for r in (
-        v.groupBy("g", bcol.alias("b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    ):
-        hist.setdefault(r["g"], []).append((r["b"], r["c"]))
-    targets: dict = {}  # (g, b) -> [(q, off)]
-    for g, buckets in hist.items():
-        buckets = sorted(buckets)
-        n = sum(c for _b, c in buckets)
-        for q in quantiles:
-            # ceil of the IEEE double q*n — both engines multiply the
-            # same doubles, so the rank agrees with the oracle's CEIL
-            k = max(1, min(int(math.ceil(q * n)), n))
-            cum = 0
-            for b, c in buckets:
-                if cum + c >= k:
-                    targets.setdefault((g, b), []).append(
-                        (float(q), k - cum)
-                    )
-                    break
-                cum += c
-    # materialize the bucket id ONCE per row: the literal dispatch below
-    # is a when-chain with one branch per (group, bucket) target, and
-    # codegen does not share the log2 subtree across branches — without
-    # this column each branch would recompute it (measured ~+0.8 s at
-    # 600k rows × 15 branches)
-    arr = F.array().cast("array<struct<q:double,off:bigint>>")
-    for (g, b), qos in targets.items():
-        cond = F.col("g").eqNullSafe(F.lit(g)) & (F.col("_b") == F.lit(b))
-        arr = F.when(
-            cond,
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(q).cast("double").alias("q"),
-                        F.lit(off).cast("bigint").alias("off"),
-                    )
-                    for q, off in qos
-                ]
-            ),
-        ).otherwise(arr)
-    w = Window.partitionBy("g", "t.q").orderBy("x")
-    picked = (
-        v.withColumn("_b", bcol)
-        .select("g", "x", F.explode(arr).alias("t"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == F.col("t.off"))
-        .select("g", F.col("t.q").alias("q"), "x")
-    )
     def _qname(q: float) -> str:
         # deterministic: p{percent:02d} for 2-dp quantiles (q=0.5 -> p50,
         # q=1.0 -> p100); otherwise fixed-point digits from the Decimal
@@ -691,55 +770,21 @@ def exact_quantiles_twopass(
     names = [_qname(q) for q in quantiles]
     if len(set(names)) != len(names):
         raise ValueError(f"quantile column names collide: {names}")
-    agg = picked.groupBy("g").agg(
-        *[
-            F.max(F.when(F.col("q") == q, F.col("x"))).alias(name)
-            for q, name in zip(quantiles, names)
-        ]
+
+    def ranks(n: int) -> list[int]:
+        # ceil of the IEEE double q*n — both engines multiply the same
+        # doubles, so the rank agrees with the oracle's CEIL
+        return [max(1, min(int(math.ceil(q * n)), n)) for q in quantiles]
+
+    stats = _select_order_stats(df, group_col, value_col, ranks)
+    rows = [
+        (g, *([vals[k] for k in ranks(n)] if n else [None] * len(names)))
+        for g, (n, vals) in stats.items()
+    ]
+    schema = StructType(
+        [df.schema[group_col]] + [StructField(nm, DoubleType()) for nm in names]
     )
-    return agg.withColumnRenamed("g", group_col)
-
-
-# --- exact percentile_cont selection (scan-bounded, ≤ 2 Spark jobs) -------
-#
-# Shared machinery for percentile_cont_exact / percentile_cont_exact_grouped:
-# a VALUE-INDEPENDENT monotone bucketing (sign-split log2 ladder, ~1024
-# buckets per octave) lets ONE aggregation pass deliver the per-bucket
-# (count, min, max) histogram — no separate extent pass, no broadcast-built
-# extent join: the r12 shape paid ~6 fixed-latency driver jobs per call
-# (extent collect + two broadcast exchanges + histogram + target broadcast +
-# pick); this one pays exactly 2 (histogram, pick), and the pick pass is
-# skipped entirely when every needed order statistic resolves from the
-# histogram itself (rank at a bucket edge, or a single-valued bucket —
-# common on tie-heavy columns).
-
-_LOG_BUCKETS_PER_OCTAVE = 1024
-# clears ±max|floor(1024·log2(|x|))| (~1.1e6) for every finite double, so
-# negative / zero / positive ids can never interleave
-_LOG_BUCKET_OFFSET = 2_200_000
-
-
-def _log_bucket(col):
-    """Monotone double → bigint bucket id, no extent needed.
-
-    Weakly monotone by construction: log2 is semi-monotonic (java.lang.Math
-    contract), ×1024 is an exact power-of-two scaling, floor is monotone,
-    and the sign split keeps negatives < 0-bucket < positives. Monotonicity
-    is ALL refinement needs — each bucket is a contiguous value range, so
-    exact rank arithmetic over bucket counts stays exact. Resolution is
-    ~0.07 % of the value per bucket (2^(1/1024) spacing), the same order as
-    the old 1024-fixed-width grid on a few-octave column, and *finer* near
-    zero (where MAD deviations cluster). NaN is filtered out by callers
-    (divergence from F.percentile, which sorts NaN last — documented);
-    non-finite values are outside the contract, as before.
-    """
-    scaled = lambda c: F.floor(F.log2(c) * _LOG_BUCKETS_PER_OCTAVE)  # noqa: E731
-    return (
-        F.when(col == 0, F.lit(0))
-        .when(col > 0, F.lit(_LOG_BUCKET_OFFSET) + scaled(col))
-        .otherwise(F.lit(-_LOG_BUCKET_OFFSET) - scaled(-col))
-        .cast("long")
-    )
+    return df.sparkSession.createDataFrame(rows, schema)
 
 
 def _interpolate_cont(positions: list[float], vals: dict) -> list[float]:
@@ -813,108 +858,35 @@ def percentile_cont_exact_grouped(
     value_col: str,
     percentages: list[float],
 ) -> dict:
-    """Per-group ``percentile_cont`` values via the same histogram
-    refinement as ``percentile_cont_exact`` (same bit-exact Spark
-    interpolation), for LOW-CARDINALITY group keys (driver state is
-    |groups| × populated buckets, the exact_quantiles_twopass contract).
-    Returns {group: [value per percentage]}; groups whose values are all
-    null/NaN are ABSENT from the result (callers fall through to a NULL
-    literal — the F.percentile aggregate would emit a NULL-valued row).
+    """Per-group ``percentile_cont`` values via ``_select_order_stats``
+    (same bit-exact Spark interpolation as ``percentile_cont_exact``),
+    for LOW-CARDINALITY group keys. Returns {group: [value per
+    percentage]}; a group whose values are all null/NaN maps to ``None``
+    per percentage — the NULL-valued row the F.percentile aggregate
+    emits (``case_by_group`` turns the map into a literal column).
     """
-    from pyspark.sql import Window
 
-    v = df.select(
-        F.col(group_col).alias("g"), F.col(value_col).cast("double").alias("x")
-    ).filter(F.col("x").isNotNull() & ~F.isnan(F.col("x")))
-    # JOB 1 — the only unconditional one: per-(group, log-bucket)
-    # (count, min, max), one map-combinable aggregation, collected
-    # (bounded: populated buckets only — ≤ a few thousand per group for
-    # any realistic dynamic range). Group sizes n fall out as the sum of
-    # bucket counts, so there is NO separate extent pass; ranks landing
-    # on a bucket edge (offset 1 / offset count) or in a single-valued
-    # bucket resolve straight from the bucket min/max.
-    positions_by_g: dict = {}
-    need: dict = {}
-    hist_rows = (
-        v.groupBy("g", _log_bucket(F.col("x")).alias("b"))
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.min("x").alias("bmin"),
-            F.max("x").alias("bmax"),
-        )
-        .collect()
+    def positions(n: int) -> list[float]:
+        return [float(n - 1) * p for p in percentages]
+
+    stats = _select_order_stats(
+        df, group_col, value_col, lambda n: _ranks_for(positions(n))
     )
-    hist: dict = {}
-    for r in hist_rows:
-        hist.setdefault(r["g"], []).append(
-            (r["b"], r["c"], r["bmin"], r["bmax"])
-        )
-    for g, buckets in hist.items():
-        n = sum(c for _b, c, _mn, _mx in buckets)
-        poss = [float(n - 1) * p for p in percentages]
-        positions_by_g[g] = poss
-        need[g] = _ranks_for(poss)
-    vals: dict = {}
-    unresolved: list = []
-    for g, ranks in need.items():
-        buckets = sorted(hist[g])
-        vals[g] = {}
-        cum, i = 0, 0
-        for k in ranks:
-            while i < len(buckets):
-                b, c, bmin, bmax = buckets[i]
-                if cum + c >= k:
-                    off = k - cum
-                    if bmin == bmax or off == 1:
-                        vals[g][k] = float(bmin)
-                    elif off == c:
-                        vals[g][k] = float(bmax)
-                    else:
-                        unresolved.append((g, b, k, off))
-                    break
-                cum += c
-                i += 1
-    if unresolved:
-        # JOB 2 — only when a rank sits strictly inside a multi-valued
-        # bucket: target-bucket rows are selected by LITERAL (g, b)
-        # predicates and matched to their (rank, offset) via an exploded
-        # literal struct array — no broadcast exchange, no
-        # createDataFrame — then a per-(g, rank) window picks the
-        # offset-th value of the ~n/buckets-sized slice.
-        by_gb: dict = {}
-        for g, b, k, off in unresolved:
-            by_gb.setdefault((g, b), []).append((k, off))
-        # bucket id materialized once per row — the when-chain has one
-        # branch per (group, bucket) target and codegen does not share
-        # the log2 subtree across branches (see exact_quantiles_twopass)
-        arr = F.array().cast("array<struct<k:bigint,off:bigint>>")
-        for (g, b), kos in by_gb.items():
-            cond = F.col("g").eqNullSafe(F.lit(g)) & (
-                F.col("_b") == F.lit(b)
-            )
-            arr = F.when(
-                cond,
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).cast("bigint").alias("k"),
-                            F.lit(off).cast("bigint").alias("off"),
-                        )
-                        for k, off in kos
-                    ]
-                ),
-            ).otherwise(arr)
-        w = Window.partitionBy("g", "t.k").orderBy("x")
-        picked = (
-            v.withColumn("_b", _log_bucket(F.col("x")))
-            .select("g", "x", F.explode(arr).alias("t"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == F.col("t.off"))
-            .select("g", F.col("t.k").alias("k"), "x")
-        )
-        for r in picked.collect():
-            vals[r["g"]][int(r["k"])] = float(r["x"])
     return {
-        g: _interpolate_cont(poss, vals[g])
-        for g, poss in positions_by_g.items()
+        g: _interpolate_cont(positions(n), vals)
+        if n
+        else [None] * len(percentages)
+        for g, (n, vals) in stats.items()
     }
+
+
+def case_by_group(key_col: str, values: dict) -> Column:
+    """``CASE WHEN key <=> g THEN value … ELSE NULL END`` (double) from a
+    {group: value} map — how the selection operators' per-group results
+    come back into a plan as literals (bounded-model collect: no join, no
+    broadcast). ``eqNullSafe`` so a NULL group key still matches its own
+    branch (plain ``==`` is never true for NULL)."""
+    e = F.lit(None).cast("double")
+    for g, val in values.items():
+        e = F.when(F.col(key_col).eqNullSafe(F.lit(g)), F.lit(val)).otherwise(e)
+    return e

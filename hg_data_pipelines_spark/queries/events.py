@@ -2630,7 +2630,7 @@ def funnel_time_to_convert(spark, sf_dir):
         )
     from functools import reduce
 
-    from ..operators.scale import percentile_cont_exact_grouped
+    from ..operators.scale import case_by_group, percentile_cont_exact_grouped
 
     # conversion deltas are microsecond-granular — near-continuous, so
     # the per-pair F.percentile buffer was row-bounded (guide §5). The
@@ -2644,12 +2644,7 @@ def funnel_time_to_convert(spark, sf_dir):
     qs = percentile_cont_exact_grouped(deltas, "pair", "d_us", [0.5, 0.9])
 
     def q_expr(i):
-        e = F.lit(None).cast("double")
-        for g, vals in qs.items():
-            e = F.when(
-                F.col("pair").eqNullSafe(F.lit(g)), F.lit(vals[i])
-            ).otherwise(e)
-        return e
+        return case_by_group("pair", {g: v[i] for g, v in qs.items()})
 
     return (
         deltas.groupBy("pair", "pair_idx")

@@ -179,7 +179,7 @@ def benford_first_digit(spark, sf_dir):
     """,
 )
 def mad_outliers(spark, sf_dir):
-    from ..operators.scale import percentile_cont_exact_grouped
+    from ..operators.scale import case_by_group, percentile_cont_exact_grouped
 
     li = load(spark, sf_dir, "lineitem")
     # Grouped medians via histogram-refinement selection instead of the
@@ -196,21 +196,13 @@ def mad_outliers(spark, sf_dir):
     med = percentile_cont_exact_grouped(
         li, "l_returnflag", "l_extendedprice", [0.5]
     )
-    m_expr = F.lit(None).cast("double")
-    for g, (v,) in med.items():
-        m_expr = F.when(
-            F.col("l_returnflag").eqNullSafe(F.lit(g)), F.lit(v)
-        ).otherwise(m_expr)
+    m_expr = case_by_group("l_returnflag", {g: v for g, (v,) in med.items()})
     dev_df = li.select(
         "l_returnflag",
         F.abs(F.col("l_extendedprice") - m_expr).alias("dev"),
     )
     mad = percentile_cont_exact_grouped(dev_df, "l_returnflag", "dev", [0.5])
-    mad_expr = F.lit(None).cast("double")
-    for g, (v,) in mad.items():
-        mad_expr = F.when(
-            F.col("l_returnflag").eqNullSafe(F.lit(g)), F.lit(v)
-        ).otherwise(mad_expr)
+    mad_expr = case_by_group("l_returnflag", {g: v for g, (v,) in mad.items()})
     return (
         li.withColumn("m", m_expr)
         .withColumn("mad", mad_expr)
@@ -624,21 +616,17 @@ def psi_value_drift(spark, sf_dir):
     # retires the eager checkpoint + broadcast join the old cuts table
     # needed (this query previously spent 16 shuffles, then 1 broadcast
     # + checkpoint; now the cuts are plain literals in the projection).
-    from ..operators.scale import percentile_cont_exact_grouped
+    from ..operators.scale import case_by_group, percentile_cont_exact_grouped
 
     cuts_map = percentile_cont_exact_grouped(
         ev.filter(F.col("half") == 1), "event_type", "value", list(_DQ10_CUTS)
     )
+    # an event type whose baseline values are all NULL stays, with NULL
+    # cuts (every row lands in bin 1) — the SQL's inner join keeps it too
     etypes = sorted(cuts_map)
 
     def cut_col(i):
-        e = F.lit(None).cast("double")
-        for g in etypes:
-            e = F.when(
-                F.col("event_type").eqNullSafe(F.lit(g)),
-                F.lit(cuts_map[g][i]),
-            ).otherwise(e)
-        return e
+        return case_by_group("event_type", {g: c[i] for g, c in cuts_map.items()})
 
     # the old shape inner-joined cuts, keeping only event types present
     # in the baseline half — replicate with a literal membership filter

@@ -1405,7 +1405,7 @@ def ratio_to_report(spark, sf_dir):
     """,
 )
 def median_absolute_deviation(spark, sf_dir):
-    from ..operators.scale import percentile_cont_exact_grouped
+    from ..operators.scale import case_by_group, percentile_cont_exact_grouped
 
     li = load(spark, sf_dir, "lineitem")
     # Scan-bounded grouped medians (bit-identical to percentile_cont)
@@ -1415,21 +1415,13 @@ def median_absolute_deviation(spark, sf_dir):
     med = percentile_cont_exact_grouped(
         li, "l_returnflag", "l_extendedprice", [0.5]
     )
-    m_expr = F.lit(None).cast("double")
-    for g, (v,) in med.items():
-        m_expr = F.when(
-            F.col("l_returnflag").eqNullSafe(F.lit(g)), F.lit(v)
-        ).otherwise(m_expr)
+    m_expr = case_by_group("l_returnflag", {g: v for g, (v,) in med.items()})
     dev_df = li.select(
         "l_returnflag",
         F.abs(F.col("l_extendedprice") - m_expr).alias("dev"),
     )
     mad = percentile_cont_exact_grouped(dev_df, "l_returnflag", "dev", [0.5])
-    mad_expr = F.lit(None).cast("double")
-    for g, (v,) in mad.items():
-        mad_expr = F.when(
-            F.col("l_returnflag").eqNullSafe(F.lit(g)), F.lit(v)
-        ).otherwise(mad_expr)
+    mad_expr = case_by_group("l_returnflag", {g: v for g, (v,) in mad.items()})
     return (
         li.select("l_returnflag")
         .distinct()

@@ -41,7 +41,7 @@ from .common import load, query
     """,
 )
 def exact_percentiles(spark, sf_dir):
-    from ..operators.scale import percentile_cont_exact_grouped
+    from ..operators.scale import case_by_group, percentile_cont_exact_grouped
 
     li = load(spark, sf_dir, "lineitem")
     # Scan-bounded grouped percentiles (bit-identical to percentile_cont;
@@ -52,14 +52,7 @@ def exact_percentiles(spark, sf_dir):
     )
 
     def q_expr(i):
-        # eqNullSafe: a NULL group key must still match its literal branch
-        # (plain == is never true for NULL — advisor r12)
-        e = F.lit(None).cast("double")
-        for g, vals in qs.items():
-            e = F.when(
-                F.col("l_returnflag").eqNullSafe(F.lit(g)), F.lit(vals[i])
-            ).otherwise(e)
-        return e
+        return case_by_group("l_returnflag", {g: v[i] for g, v in qs.items()})
 
     return li.groupBy("l_returnflag").agg(
         q_expr(0).alias("p50"),

@@ -1,6 +1,7 @@
-"""Property tests for the DRIVER-SIDE math inside the round-9 selection
-operators: the bucket-walk/offset arithmetic of exact_quantiles_twopass
-and the convex containment sign test of grid_containment_join. The Spark
+"""Property tests for the DRIVER-SIDE math inside the selection
+operators: the histogram rank walk shared by exact_quantiles_twopass and
+percentile_cont_exact(_grouped) (``scale._walk_histogram``), and the
+convex containment sign test of grid_containment_join. The Spark
 plumbing is swept by fixed tests (test_scale.py, the J16/A28 oracles);
 hypothesis drives the kernels over adversarial inputs — ties at bucket
 boundaries, degenerate groups, points ON polygon edges."""
@@ -12,46 +13,68 @@ import math
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from hg_data_pipelines_spark.operators.scale import _walk_histogram
 
-def _twopass_rank_select(xs: list[float], q: float, n_buckets: int = 16):
-    """Mirror of the operator's histogram walk: locate target bucket via
-    monotone bucketing, pick the (k - cum_before)-th value within it."""
-    n = len(xs)
-    k = max(1, min(int(math.ceil(q * n)), n))
-    lo, hi = min(xs), max(xs)
-    if hi > lo:
-        def bucket(x):
-            return min(int(math.floor((x - lo) * n_buckets / (hi - lo))),
-                       n_buckets - 1)
-    else:
-        def bucket(x):
-            return 0
-    counts = [0] * n_buckets
+_QS = [0.01, 0.25, 0.5, 0.9, 0.99, 1.0]
+
+
+def _log_bucket(x: float) -> int:
+    """Python twin of ``scale._log_bucket`` (sign-split log2 ladder)."""
+    if x == 0:
+        return 0
+    s = math.floor(math.log2(abs(x)) * 1024)
+    return 2_200_000 + s if x > 0 else -2_200_000 - s
+
+
+# monotone bucketings: the walk must be exact under ANY of them
+_BUCKETINGS = st.one_of(
+    st.just(_log_bucket),
+    st.just(lambda x: 0),  # one bucket: every rank inside it
+    st.just(lambda x: x),  # one bucket per distinct value
+    st.floats(min_value=0.25, max_value=1e5).map(
+        lambda w: lambda x: math.floor(x / w)
+    ),
+)
+
+
+def _walk_select(xs: list[float], ks: list[int], bucket) -> dict:
+    """Run the operator's walk over ``xs`` bucketed by ``bucket``, then
+    settle each unresolved (g, b, k, off) the way the Spark pick does:
+    the off-th smallest value of bucket b."""
+    hist: dict = {}
     for x in xs:
-        counts[bucket(x)] += 1
-    cum = 0
-    for b in range(n_buckets):
-        if cum + counts[b] >= k:
-            within = sorted(x for x in xs if bucket(x) == b)
-            return within[k - cum - 1]
-        cum += counts[b]
-    raise AssertionError("walk must terminate")
+        b = bucket(x)
+        c, lo, hi = hist.get(b, (0, x, x))
+        hist[b] = (c + 1, min(lo, x), max(hi, x))
+    tuples = [(b, c, lo, hi) for b, (c, lo, hi) in hist.items()]
+    vals, unresolved = _walk_histogram({"g": tuples}, {"g": ks})
+    for g, b, k, off in unresolved:
+        assert 1 < off < hist[b][0]  # edges resolve from min/max
+        vals[g][k] = sorted(x for x in xs if bucket(x) == b)[off - 1]
+    return vals["g"]
 
 
 class TestTwopassQuantileWalk:
     @settings(max_examples=300, deadline=None)
     @given(
-        xs=st.lists(
-            st.floats(min_value=-1e6, max_value=1e6,
-                      allow_nan=False, allow_infinity=False),
-            min_size=1, max_size=80,
+        xs=st.one_of(
+            st.lists(
+                st.floats(min_value=-1e6, max_value=1e6,
+                          allow_nan=False, allow_infinity=False),
+                min_size=1, max_size=80,
+            ),
+            # tie-heavy: few distinct values, many at bucket boundaries
+            st.lists(st.integers(-4, 4).map(float), min_size=1, max_size=80),
         ),
-        q=st.sampled_from([0.01, 0.25, 0.5, 0.9, 0.99, 1.0]),
+        qs=st.lists(st.sampled_from(_QS), min_size=1, max_size=4),
+        bucket=_BUCKETINGS,
     )
-    def test_walk_equals_sorted_rank(self, xs, q):
+    def test_walk_equals_sorted_rank(self, xs, qs, bucket):
         n = len(xs)
-        k = max(1, min(int(math.ceil(q * n)), n))
-        assert _twopass_rank_select(xs, q) == sorted(xs)[k - 1]
+        ks = [max(1, min(int(math.ceil(q * n)), n)) for q in qs]
+        got = _walk_select(xs, ks, bucket)
+        for k in ks:
+            assert got[k] == sorted(xs)[k - 1]
 
     @settings(max_examples=100, deadline=None)
     @given(
@@ -59,9 +82,11 @@ class TestTwopassQuantileWalk:
                     allow_nan=False, allow_infinity=False),
         n=st.integers(min_value=1, max_value=50),
         q=st.sampled_from([0.5, 0.99]),
+        bucket=_BUCKETINGS,
     )
-    def test_degenerate_all_equal(self, v, n, q):
-        assert _twopass_rank_select([v] * n, q) == v
+    def test_degenerate_all_equal(self, v, n, q, bucket):
+        k = max(1, min(int(math.ceil(q * n)), n))
+        assert _walk_select([v] * n, [k], bucket) == {k: v}
 
 
 def _inside_convex(xs, ys, px, py):

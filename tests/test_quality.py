@@ -227,3 +227,48 @@ class TestCusumChangepoint:
                 assert out[day]["changepoint"]
                 fired = True
         assert fired, "persistent +30% shift must trip the CUSUM threshold"
+
+
+class TestPsiValueDrift:
+    def test_all_null_baseline_event_type_matches_oracle(self, spark, tmp_path):
+        """An event type whose baseline-half values are all NULL keeps its
+        row: the declared SQL's cuts are NULL for it (every row lands in
+        bin 1), so the Spark side must not drop it from the cut map."""
+        import duckdb
+        import pyarrow.parquet as pq
+
+        from hg_data_pipelines_spark.queries import ORACLES, QUERIES
+        from tools.check_correctness import table_hash
+
+        src = "/root/testdata/sf0.001/events.parquet"
+        dst = str(tmp_path / "events.parquet")
+        con = duckdb.connect()
+        nulled = con.execute(
+            f"""
+            WITH days AS (
+                SELECT day, NTILE(2) OVER (ORDER BY day) AS half
+                FROM (SELECT DISTINCT CAST(ts AS DATE) AS day
+                      FROM read_parquet('{src}'))
+            )
+            SELECT e.* REPLACE (
+                CASE WHEN e.event_type = 'purchase' AND d.half = 1
+                     THEN NULL ELSE e.value END AS value)
+            FROM read_parquet('{src}') e
+            JOIN days d ON CAST(e.ts AS DATE) = d.day
+            ORDER BY e.event_id
+            """
+        ).arrow()
+        pq.write_table(nulled.cast(pq.read_schema(src)), dst)
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM read_parquet('{dst}')"
+        )
+        res = con.execute(ORACLES["DQ10_psi_value_drift"])
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+        assert "purchase" in {r[ocols.index("event_type")] for r in orows}
+
+        sdf = QUERIES["DQ10_psi_value_drift"](spark, str(tmp_path))
+        srows = sdf.collect()
+        assert table_hash(
+            sdf.columns, [[r[c] for c in sdf.columns] for r in srows]
+        ) == table_hash(ocols, orows)

@@ -1072,8 +1072,9 @@ class TestExactQuantilesTwopass:
             li, "l_returnflag", "l_extendedprice", [0.5, 0.9]
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
-        # the full relation is never range-shuffled for ordering — only
-        # the ~n/n_buckets candidate slice hits the window's hash exchange
+        # the full relation is never range-shuffled for ordering — the
+        # result is a local relation of the picked values; only the
+        # target-bucket slice ever reaches the pick's window
         assert "Exchange rangepartitioning" not in plan
 
 
@@ -1135,7 +1136,8 @@ class TestPercentileContExact:
         EXCLUDED from the selection (F.percentile would sort them last —
         a documented divergence; no declared query feeds NaN), and an
         empty/all-null column yields None (the aggregate's NULL), not
-        NaN."""
+        NaN. A group with no non-null value is present with None — the
+        NULL-valued row the grouped aggregate emits."""
         from hg_data_pipelines_spark.operators.scale import (
             percentile_cont_exact,
             percentile_cont_exact_grouped,
@@ -1152,5 +1154,5 @@ class TestPercentileContExact:
             "g string, x double",
         )
         got = percentile_cont_exact_grouped(gdf, "g", "x", [0.5])
-        # all-NaN / all-null groups are absent; real groups exact
-        assert got == {"a": [1.5]}
+        # all-NaN / all-null groups are present as None; real groups exact
+        assert got == {"a": [1.5], "b": [None], "c": [None]}
