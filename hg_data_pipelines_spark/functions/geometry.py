@@ -22,6 +22,8 @@ semantics, float arithmetic instead of cv2's fixed-point tables), and
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 # --------------------------------------------------------------------------
@@ -629,43 +631,157 @@ def group_bboxes_greedy(iou: np.ndarray, threshold: float) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
+TILE_SIZE = 32  # most triangles in one tile of the mesh index
+# Tile boxes grow by this fraction of the largest |coordinate| in play (mesh
+# or ray origin) — far more than the rounding of the slab test and of the
+# (u, v) acceptance, so no hit the per-pair arithmetic accepts is culled.
+_BOX_PAD = 1e-8
+# Most (ray × tile) cells one slab test holds: sets the ray chunk size.
+_MASK_CELLS = 1 << 16
+_EPS = 1e-12
+
+
+class TileIndex(NamedTuple):
+    """A triangle mesh kd-ordered into tiles of at most TILE_SIZE triangles.
+
+    Tile k holds triangles ``starts[k]:starts[k + 1]`` of ``v0``/``e1``/
+    ``e2`` (first vertex and the edges v1 − v0, v2 − v0, in tile order)
+    inside the unpadded axis-aligned box ``lo[k]..hi[k]``; ``scale`` is the
+    largest finite |coordinate| of the mesh."""
+
+    v0: np.ndarray
+    e1: np.ndarray
+    e2: np.ndarray
+    starts: np.ndarray
+    lo: np.ndarray
+    hi: np.ndarray
+    scale: float
+
+
+def build_tile_index(triangles: np.ndarray) -> TileIndex:
+    """(M, 3, 3) triangles → TileIndex: recursive median split of the
+    centroids on the axis of largest extent, down to TILE_SIZE per tile.
+    Small enough to broadcast in place of the raw triangle array."""
+    tri = np.asarray(triangles, dtype=np.float64).reshape(-1, 3, 3)
+    centroids = tri.mean(axis=1)
+    tiles = []
+    todo = [np.arange(len(tri))] if len(tri) else []
+    while todo:
+        idx = todo.pop()
+        if len(idx) <= TILE_SIZE:
+            tiles.append(idx)
+            continue
+        c = centroids[idx]
+        axis = np.argmax(c.max(axis=0) - c.min(axis=0))
+        half = len(idx) // 2
+        split = np.argpartition(c[:, axis], half)
+        todo += [idx[split[half:]], idx[split[:half]]]
+    tri = tri[np.concatenate([np.zeros(0, dtype=np.intp), *tiles])]
+    starts = np.cumsum([0] + [len(t) for t in tiles])
+    v0, v1, v2 = tri[:, 0], tri[:, 1], tri[:, 2]
+    # fmin/fmax: a NaN vertex (never a hit) must not void its tile's box
+    lo = np.fmin.reduceat(np.fmin.reduce(tri, axis=1), starts[:-1])
+    hi = np.fmax.reduceat(np.fmax.reduce(tri, axis=1), starts[:-1])
+    finite = np.abs(tri[np.isfinite(tri)])
+    return TileIndex(
+        v0=v0,
+        e1=v1 - v0,
+        e2=v2 - v0,
+        starts=starts,
+        lo=lo,
+        hi=hi,
+        scale=float(finite.max(initial=0.0)),
+    )
+
+
+def _first_hit_t(index: TileIndex, origin: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """(R,) smallest accepted Möller–Trumbore t of the rays origin + t·d[r]
+    (inf = miss), evaluating only the triangles of tiles each ray's slab
+    test admits."""
+    best = np.full(len(d), np.inf)
+    n_tiles = len(index.lo)
+    if n_tiles == 0:
+        return best
+    # The (origin, triangle) terms: computed once, bit-equal to per pair.
+    s = origin - index.v0
+    q = np.cross(s, index.e1)
+    e2q = np.einsum("mk,mk->m", index.e2, q)
+    pad = _BOX_PAD * (1.0 + max(index.scale, float(np.abs(origin).max())))
+    lo = index.lo - pad - origin
+    hi = index.hi + pad - origin
+    sizes = np.diff(index.starts)
+    chunk = max(1, _MASK_CELLS // n_tiles)
+    for a in range(0, len(d), chunk):
+        dc = d[a : a + chunk]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            t1 = lo / dc[:, None, :]  # (r, K, 3); ±inf where d is 0
+            t2 = hi / dc[:, None, :]
+        # 0/0 = NaN rejects the tile: that ray runs in a face plane of the
+        # padded box, so it passes no closer than the pad to the tile
+        near = np.minimum(t1, t2).max(axis=2)
+        far = np.maximum(t1, t2).min(axis=2)
+        rr, kk = np.nonzero(far >= np.maximum(near, 0.0))
+        counts = sizes[kk]
+        ray = np.repeat(rr, counts)
+        tri = np.arange(counts.sum()) + np.repeat(
+            index.starts[kk] - (np.cumsum(counts) - counts), counts
+        )
+        dd = dc[ray]
+        p = np.cross(dd, index.e2[tri])
+        det = np.einsum("pk,pk->p", index.e1[tri], p)
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+            inv_det = np.where(np.abs(det) > _EPS, 1.0 / det, np.nan)
+            u = np.einsum("pk,pk->p", s[tri], p) * inv_det
+            v = np.einsum("pk,pk->p", dd, q[tri]) * inv_det
+            t = e2q[tri] * inv_det
+        hit = (u >= 0) & (v >= 0) & (u + v <= 1) & (t > _EPS) & np.isfinite(t)
+        np.minimum.at(best, a + ray[hit], t[hit])
+    return best
+
+
+def first_hits(
+    index: TileIndex, origins: np.ndarray, directions: np.ndarray
+) -> np.ndarray:
+    """First-hit points of N rays on an indexed mesh: (N,3) origins, (N,3)
+    directions → (N,3) points, NaN rows for misses. One kernel pass per
+    distinct origin (a panorama's rays share its camera)."""
+    origins = np.asarray(origins, dtype=np.float64).reshape(-1, 3)
+    directions = np.asarray(directions, dtype=np.float64).reshape(-1, 3)
+    best = np.full(len(origins), np.inf)
+    if len(origins):
+        uniq, inv = np.unique(origins, axis=0, return_inverse=True)
+        inv = inv.reshape(-1)
+        order = np.argsort(inv, kind="stable")
+        bounds = np.cumsum(np.bincount(inv, minlength=len(uniq)))[:-1]
+        for o, rows in zip(uniq, np.split(order, bounds)):
+            best[rows] = _first_hit_t(index, o, directions[rows])
+    # each ray's own origin: a group's representative may differ in the
+    # sign of a zero coordinate
+    with np.errstate(invalid="ignore"):  # inf · 0 on misses, reset below
+        pts = origins + best[:, None] * directions
+    pts[~np.isfinite(best)] = np.nan
+    return pts
+
+
 def ray_triangle_intersections(
     origins: np.ndarray, directions: np.ndarray, triangles: np.ndarray
 ) -> np.ndarray:
     """First-hit points for N rays against M triangles (Möller–Trumbore).
 
     (N,3) origins, (N,3) directions, (M,3,3) triangles → (N,3) hit points
-    with NaN rows for misses. Replaces the reference's
-    mesh.multi_ray_trace(..., first_point=True)
-    (street_level_grouping.py:216-218). O(N·M) vectorized; partition rays
-    across executors and broadcast triangles for scale.
+    with NaN rows for misses (every row for an empty mesh). Replaces the
+    reference's mesh.multi_ray_trace(..., first_point=True)
+    (street_level_grouping.py:216-218), whose BVH becomes a flat tile index
+    (``build_tile_index``): per distinct origin, a slab test of its rays
+    against the K ≈ M/TILE_SIZE padded tile boxes, then Möller–Trumbore
+    only on the triangles of admitted tiles. The cull decides which pairs
+    run, never their arithmetic: the result equals an uncut pass over all
+    N·M pairs (tests/reference_oracle.py) bit for bit, except where a
+    pair's |det| clears the 1e-12 threshold only by rounding (a ray grazing
+    a triangle's plane, a sliver triangle) — there the uncut answer is
+    itself rounding noise.
     """
-    origins = np.asarray(origins, dtype=np.float64)
-    directions = np.asarray(directions, dtype=np.float64)
-    tri = np.asarray(triangles, dtype=np.float64)
-    v0, v1, v2 = tri[:, 0], tri[:, 1], tri[:, 2]
-    e1, e2 = v1 - v0, v2 - v0  # (M,3)
-
-    eps = 1e-12
-    d = directions[:, None, :]  # (N,1,3)
-    p = np.cross(d, e2[None, :, :])  # (N,M,3)
-    det = np.einsum("mk,nmk->nm", e1, p)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        inv_det = np.where(np.abs(det) > eps, 1.0 / det, np.nan)
-        s = origins[:, None, :] - v0[None, :, :]
-        u = np.einsum("nmk,nmk->nm", s, p) * inv_det
-        q = np.cross(s, e1[None, :, :])
-        v = np.einsum("nmk,nmk->nm", d.repeat(tri.shape[0], axis=1), q) * inv_det
-        t = np.einsum("mk,nmk->nm", e2, q) * inv_det
-    hit = (
-        (u >= 0) & (v >= 0) & (u + v <= 1) & (t > eps) & np.isfinite(t)
-    )
-    t_masked = np.where(hit, t, np.inf)
-    best = np.argmin(t_masked, axis=1)
-    best_t = t_masked[np.arange(len(origins)), best]
-    pts = origins + best_t[:, None] * directions
-    pts[~np.isfinite(best_t)] = np.nan
-    return pts
+    return first_hits(build_tile_index(triangles), origins, directions)
 
 
 # --------------------------------------------------------------------------

@@ -11,7 +11,8 @@ durable as Parquet between runs.
 
 Each materialization also records the Dagster-style output metadata
 (schema + row count — the ``add_output_metadata`` analogue,
-street_level_grouping.py:92-95) into ``ctx.reports``.
+street_level_grouping.py:92-95) into ``ctx.reports``. The row count is an
+``Observation`` collected by the write itself, so it costs no extra job.
 
 Scale posture: a stage's ``partition_by`` routes through
 ``write_warehouse_table`` so facts land partitioned (pruning for every
@@ -26,7 +27,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .io import write_warehouse_table
 
@@ -75,8 +77,12 @@ class Pipeline:
             df = stage.fn(spark, ctx)
             ctx.tables[stage.name] = df
             if stage.materialize:
+                rows = Observation()
                 path = write_warehouse_table(
-                    df, warehouse_dir, stage.name, partition_by=stage.partition_by
+                    df.observe(rows, F.count(F.lit(1)).alias("rows")),
+                    warehouse_dir,
+                    stage.name,
+                    partition_by=stage.partition_by,
                 )
                 # Re-read the landed table: downstream stages scan Parquet
                 # (pruning/pushdown apply) instead of recomputing the plan.
@@ -89,7 +95,7 @@ class Pipeline:
                 ctx.reports[stage.name] = {
                     "path": path,
                     "schema": landed.schema.simpleString(),
-                    "rows": landed.count(),
+                    "rows": rows.get["rows"],
                 }
         return ctx
 

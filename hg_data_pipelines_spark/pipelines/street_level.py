@@ -14,15 +14,17 @@ Spark-first translation:
   ``obj_idx`` (original row order) is the tiebreak that reproduces pandas'
   first-max semantics.
 - the pose lookup loop (J1) is a broadcast equi-join on the file stem.
-- pixel→ray math (U1) runs vectorized per polygon inside applyInPandas.
-- ray↔mesh intersection (U6) broadcasts the triangle soup and processes rays
-  partition-parallel via mapInPandas — the reference's single
-  ``multi_ray_trace`` call becomes one batched Möller–Trumbore kernel per
-  Arrow batch.
+- pixel→ray math (U1) runs vectorized inside applyInPandas: one
+  ``pixels_to_rays`` call per distinct (pose, image size) of a photo.
+- ray↔mesh intersection (U6) broadcasts a tile index of the triangle soup
+  (``geometry.build_tile_index``) and processes rays partition-parallel via
+  mapInPandas — the reference's single ``multi_ray_trace`` call (a BVH)
+  becomes one tile-culled Möller–Trumbore pass per distinct ray origin in
+  each Arrow batch.
 
-Scale: one shuffle per stage boundary (groupBy file_name); the mesh is a
-broadcast variable (≤ executor memory; tile the mesh spatially beyond that);
-joblib's loky pool (reference :191-192) is replaced by Spark tasks.
+Scale: one shuffle per stage boundary (groupBy file_name); the mesh index is
+a broadcast variable (≤ executor memory; partition the mesh spatially beyond
+that); joblib's loky pool (reference :191-192) is replaced by Spark tasks.
 """
 
 from __future__ import annotations
@@ -124,23 +126,36 @@ _BEST_LINES_SCHEMA = T.StructType(
 )
 
 
+_POSE_COLS = [
+    "roll_deg", "pitch_deg", "heading_deg", "proj_x", "proj_y", "proj_z",
+    "image_width", "image_height",
+]
+
+
 def _rays_one_photo(pdf: pd.DataFrame) -> pd.DataFrame:
-    out_rows = []
-    for _, row in pdf.iterrows():
-        ring = [list(p) for p in json.loads(row["polygon_json"])[0]]
+    if pdf.empty:
+        return pd.DataFrame({f.name: [] for f in _BEST_LINES_SCHEMA.fields})
+    px, py = [], []  # per row: the sampled ring's truncated pixel coords
+    for s in pdf["polygon_json"]:
+        ring = [list(p) for p in json.loads(s)[0]]
         # shapely's Polygon closes an open ring; exterior.coords includes the
         # closing point (reference :158-166 iterates the closed ring).
         if ring[0] != ring[-1]:
             ring.append(ring[0])
         pts = ring[::POLYGON_SPACING]
-        px = np.array([int(p[0]) for p in pts], dtype=np.float64)
-        py = np.array([int(p[1]) for p in pts], dtype=np.float64)
+        px.append(np.array([int(p[0]) for p in pts], dtype=np.float64))
+        py.append(np.array([int(p[1]) for p in pts], dtype=np.float64))
+    polygons, origins = [None] * len(pdf), [None] * len(pdf)
+    # one ray cast per pose: pixels_to_rays is elementwise, so casting the
+    # concatenated polygons equals casting each one
+    for rows in pdf.groupby(_POSE_COLS, sort=False, dropna=False).indices.values():
+        row = pdf.iloc[rows[0]]
         origin = np.array(
             [row["proj_x"], row["proj_y"], row["proj_z"]], dtype=np.float64
         )
         rays = G.pixels_to_rays(
-            px,
-            py,
+            np.concatenate([px[i] for i in rows]),
+            np.concatenate([py[i] for i in rows]),
             roll_rad=np.deg2rad(-row["roll_deg"]),
             pitch_rad=np.deg2rad(row["pitch_deg"]),
             heading_rad=np.deg2rad(row["heading_deg"] + 90.0),
@@ -148,21 +163,14 @@ def _rays_one_photo(pdf: pd.DataFrame) -> pd.DataFrame:
             image_width=int(row["image_width"]),
             image_height=int(row["image_height"]),
         )
-        out_rows.append(
-            {
-                "file_name": row["file_name"],
-                "obj_idx": row["obj_idx"],
-                "bbox": row["bbox"],
-                "score": row["score"],
-                "class": row["class"],
-                "class_name": row["class_name"],
-                "polygon_3d": [list(r) for r in rays],
-                "origin": list(origin),
-            }
-        )
-    if not out_rows:
-        return pd.DataFrame({f.name: [] for f in _BEST_LINES_SCHEMA.fields})
-    return pd.DataFrame(out_rows)
+        bounds = np.cumsum([len(px[i]) for i in rows])[:-1]
+        for i, poly in zip(rows, np.split(rays, bounds)):
+            polygons[i] = list(poly)
+            origins[i] = list(origin)
+    out = pdf[[f.name for f in _BEST_LINES_SCHEMA.fields[:6]]].copy()
+    out["polygon_3d"] = polygons
+    out["origin"] = origins
+    return out
 
 
 def best_lines_3d(
@@ -231,7 +239,8 @@ def point_and_mesh_intersection(
 ) -> DataFrame:
     """Replace each ray endpoint with its first mesh hit (reference :202-234).
 
-    ``triangles``: (M, 3, 3) float array, broadcast to executors. Rays run
+    ``triangles``: (M, 3, 3) float array (M may be 0: every ray misses),
+    broadcast to executors as its ``geometry.TileIndex``. Rays run
     from ``origin`` *through* each polygon_3d point — the intended semantics
     of the reference's ``multi_ray_trace(origins, points)`` call (it passes
     absolute points where pyvista expects directions; we use point - origin
@@ -240,29 +249,25 @@ def point_and_mesh_intersection(
     indexed correctly per row, not via its enumerate-index bug (SURVEY.md
     §7.2 "reference bugs").
     """
-    tri_b = spark.sparkContext.broadcast(np.asarray(triangles, dtype=np.float64))
+    index_b = spark.sparkContext.broadcast(G.build_tile_index(triangles))
     schema = best_lines.schema
 
     def _intersect(batches):
-        tri = tri_b.value
+        index = index_b.value
         for pdf in batches:
-            keep = pdf["polygon_3d"].map(len) > 1  # P7 filter (:208)
-            pdf = pdf[keep]
+            lens = pdf["polygon_3d"].map(len)
+            pdf, lens = pdf[lens > 1], lens[lens > 1].to_numpy()  # P7 (:208)
             if pdf.empty:
                 yield pdf
                 continue
-            new_polys = []
-            for _, row in pdf.iterrows():
-                origin = np.asarray(row["origin"], dtype=np.float64)
-                pts = np.array([list(p) for p in row["polygon_3d"]], dtype=np.float64)
-                dirs = pts - origin[None, :]
-                hits = G.ray_triangle_intersections(
-                    np.repeat(origin[None, :], len(pts), axis=0), dirs, tri
-                )
-                merged = np.where(np.isnan(hits), pts, hits)
-                new_polys.append([list(p) for p in merged])
+            pts = np.stack(np.concatenate(pdf["polygon_3d"].to_numpy()))
+            origins = np.repeat(np.stack(pdf["origin"].to_numpy()), lens, axis=0)
+            hits = G.first_hits(index, origins, pts - origins)
+            merged = np.where(np.isnan(hits), pts, hits)
             pdf = pdf.copy()
-            pdf["polygon_3d"] = new_polys
+            pdf["polygon_3d"] = [
+                list(m) for m in np.split(merged, np.cumsum(lens)[:-1])
+            ]
             yield pdf
 
     return best_lines.mapInPandas(_intersect, schema)

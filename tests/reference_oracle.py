@@ -7,6 +7,9 @@ Oracle sources:
 - IoU / seam wraparound: heritage-guard entities/bbox.py
 - pixel → 3D ray:        street_level_grouping.py:257-299
 - bbox inverse project:  helpers/Equirec2Perspec.py:93-119
+- first ray-mesh hit:    the engine's former brute-force Möller–Trumbore,
+                         every ray against every triangle (the tile-culled
+                         kernel must match it bit for bit)
 """
 
 from __future__ import annotations
@@ -128,3 +131,42 @@ def oracle_grouping(bboxes, threshold, image_width=W):
         for m in members:
             out[m] = gid
     return out
+
+
+def oracle_ray_triangle_intersections(
+    origins: np.ndarray, directions: np.ndarray, triangles: np.ndarray
+) -> np.ndarray:
+    """First-hit points for N rays against M triangles (Möller–Trumbore).
+
+    (N,3) origins, (N,3) directions, (M,3,3) triangles → (N,3) hit points
+    with NaN rows for misses. Replaces the reference's
+    mesh.multi_ray_trace(..., first_point=True)
+    (street_level_grouping.py:216-218). O(N·M) vectorized; partition rays
+    across executors and broadcast triangles for scale.
+    """
+    origins = np.asarray(origins, dtype=np.float64)
+    directions = np.asarray(directions, dtype=np.float64)
+    tri = np.asarray(triangles, dtype=np.float64)
+    v0, v1, v2 = tri[:, 0], tri[:, 1], tri[:, 2]
+    e1, e2 = v1 - v0, v2 - v0  # (M,3)
+
+    eps = 1e-12
+    d = directions[:, None, :]  # (N,1,3)
+    p = np.cross(d, e2[None, :, :])  # (N,M,3)
+    det = np.einsum("mk,nmk->nm", e1, p)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        inv_det = np.where(np.abs(det) > eps, 1.0 / det, np.nan)
+        s = origins[:, None, :] - v0[None, :, :]
+        u = np.einsum("nmk,nmk->nm", s, p) * inv_det
+        q = np.cross(s, e1[None, :, :])
+        v = np.einsum("nmk,nmk->nm", d.repeat(tri.shape[0], axis=1), q) * inv_det
+        t = np.einsum("mk,nmk->nm", e2, q) * inv_det
+    hit = (
+        (u >= 0) & (v >= 0) & (u + v <= 1) & (t > eps) & np.isfinite(t)
+    )
+    t_masked = np.where(hit, t, np.inf)
+    best = np.argmin(t_masked, axis=1)
+    best_t = t_masked[np.arange(len(origins)), best]
+    pts = origins + best_t[:, None] * directions
+    pts[~np.isfinite(best_t)] = np.nan
+    return pts

@@ -86,6 +86,38 @@ class TestJobLayer:
         ).fetchone()[0]
         assert n == final["rows"]
 
+    def test_street_level_pipeline_empty_mesh(self, spark, job_fixtures):
+        # A mesh file with no faces loads as (0, 3, 3): every ray misses,
+        # so every point lands unchanged.
+        from hg_data_pipelines_spark.pipelines.wall_extraction import (
+            parse_obj_triangles,
+            parse_stl_triangles,
+        )
+
+        tris = parse_obj_triangles("v 0 0 0\nv 1 0 0\nv 0 1 0\n")
+        stl = parse_stl_triangles(b"\x00" * 80 + (0).to_bytes(4, "little"))
+        assert tris.shape == stl.shape == (0, 3, 3)
+        wh = str(job_fixtures["tmp"] / "wh_empty_mesh")
+        ctx = run_pipeline(
+            spark,
+            "street_level_grouping",
+            wh,
+            {
+                "results_json_path": job_fixtures["results"],
+                "pose_csv_path": job_fixtures["pose"],
+                "mesh_triangles": tris,
+            },
+        )
+
+        def polygons(table):
+            rows = ctx.tables[table].select("file_name", "obj_idx", "polygon_3d")
+            return sorted((r[0], r[1], r[2]) for r in rows.collect())
+
+        # the stage drops single-point polygons (P7, reference :208)
+        best = [r for r in polygons("best_lines_3d") if len(r[2]) > 1]
+        assert best and polygons("point_and_mesh_intersection") == best
+        assert ctx.reports["point_and_mesh_intersection"]["rows"] == len(best)
+
     def test_rerun_is_idempotent(self, spark, job_fixtures):
         wh = str(job_fixtures["tmp"] / "wh3")
         cfg = {"results_json_path": job_fixtures["results"], "with_uuid": False}
