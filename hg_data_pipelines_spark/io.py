@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from . import schemas
+from .session import cut_lineage
 
 
 class SchemaDriftError(RuntimeError):
@@ -348,7 +349,7 @@ def _merge_base(
 
     # Materialized once (tiny: the delta's partition list); limit+1 so the
     # fallback decision never collects an unbounded list.
-    touched = df.select(*partition_by).distinct().localCheckpoint(eager=True)
+    touched = cut_lineage(df.select(*partition_by).distinct(), eager=True)
     rows = touched.limit(_MERGE_STATIC_PRUNE_MAX + 1).collect()
 
     if len(rows) <= _MERGE_STATIC_PRUNE_MAX:
@@ -419,7 +420,7 @@ def merge_warehouse_table(
     - with ``partition_by``, only partitions present in the incoming batch
       are read, merged, and rewritten (dynamic partition overwrite); a
       100 TB table with a one-day delta rewrites one day.
-    - the merged delta is pinned with an eager localCheckpoint before the
+    - the merged delta is pinned with an eager ``cut_lineage`` before the
       write, severing the scan lineage so Spark can overwrite the very
       files it read (checkpoint size = delta partitions only).
 
@@ -453,11 +454,11 @@ def merge_warehouse_table(
     w = Window.partitionBy(*keys).orderBy(
         F.desc("_src"), *[F.desc(c) for c in order]
     )
-    merged = (
+    merged = cut_lineage(
         unioned.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-        .localCheckpoint(eager=True)
+        .drop("_rn", "_src"),
+        eager=True,
     )
     writer = merged.write.mode("overwrite")
     if partition_by:
@@ -549,7 +550,7 @@ def delete_from_warehouse_table(
        this scan entirely — same contract, cheaper discovery);
     2. only touched partitions are read, anti-joined, and rewritten via
        dynamic partition overwrite (lineage severed with an eager
-       localCheckpoint so the write can replace the files it read);
+       ``cut_lineage`` so the write can replace the files it read);
     3. a touched partition whose every row is deleted yields NO output
        rows, which dynamic overwrite would silently leave in place — its
        directory is removed explicitly (the "last row of a partition"
@@ -566,9 +567,7 @@ def delete_from_warehouse_table(
     existing = spark.read.option("mergeSchema", "true").parquet(path)
     kdf = F.broadcast(keys_df.select(*keys).distinct())
     if not partition_by:
-        remaining = existing.join(kdf, keys, "left_anti").localCheckpoint(
-            eager=True
-        )
+        remaining = cut_lineage(existing.join(kdf, keys, "left_anti"), eager=True)
         n_deleted = existing.count() - remaining.count()
         remaining.write.mode("overwrite").parquet(path)
         return path, n_deleted
@@ -597,7 +596,7 @@ def delete_from_warehouse_table(
         ],
     )
     base = existing.filter(part_filter)
-    remaining = base.join(kdf, keys, "left_anti").localCheckpoint(eager=True)
+    remaining = cut_lineage(base.join(kdf, keys, "left_anti"), eager=True)
     n_deleted = base.count() - remaining.count()
     nonempty = {
         tuple(r) for r in remaining.select(*partition_by).distinct().collect()

@@ -15,7 +15,7 @@ Spark's execution model:
   class as IVF centroids). The merge itself is a Catalyst ``aggregate``
   fold over each word's symbol array — leftmost-non-overlapping,
   executed JVM-side, no Python in the loop.
-- Lineage is truncated per round (localCheckpoint) exactly like the
+- Lineage is truncated per round (``cut_lineage``) exactly like the
   other fixed-point operators; determinism comes from the total order
   (count DESC, left, right) on pair selection.
 
@@ -27,6 +27,8 @@ Python reference implementation on real fixture text.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import cut_lineage
 
 
 def _word_freq(docs: DataFrame, text_col: str) -> DataFrame:
@@ -98,7 +100,7 @@ def bpe_train(
     pair selection orders by (count DESC, left, right).
     """
     spark = docs.sparkSession
-    vocab = _word_freq(docs, text_col).localCheckpoint(eager=False)
+    vocab = cut_lineage(_word_freq(docs, text_col))
     merges = []
     for rank in range(n_merges):
         top = (
@@ -111,9 +113,9 @@ def bpe_train(
             break
         left, right, n = top[0]["left"], top[0]["right"], top[0]["n"]
         merges.append((rank, left, right, left + right, n))
-        vocab = vocab.withColumn(
-            "symbols", _merge_expr(left, right)
-        ).localCheckpoint(eager=False)
+        vocab = cut_lineage(
+            vocab.withColumn("symbols", _merge_expr(left, right))
+        )
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, n bigint"
     )

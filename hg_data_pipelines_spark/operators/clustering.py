@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import cut_lineage
+
 KMEANS_SCALE = 1 << 20
 
 
@@ -258,10 +260,8 @@ def semdedup(
     # referenced 3× below (both pair sides + the final keep join) —
     # truncate lineage so the kmeans subtree computes once, not thrice
     # (the triangle_census hazard).
-    v = (
-        vectors.join(labels, id_col)
-        .select(id_col, "cluster", vec_col)
-        .localCheckpoint(eager=False)
+    v = cut_lineage(
+        vectors.join(labels, id_col).select(id_col, "cluster", vec_col)
     )
     # squared norms once per ROW, not once per pair: the per-pair cosine
     # is then a single fold (_cosine_pre — the identical float expression

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import lsh_band_keys, minhash_signature, simhash64, tokens, word_shingles
+from ..session import cut_lineage
 
 
 def dedup_exact(df: DataFrame, keys: list[str], order: list) -> DataFrame:
@@ -304,29 +305,11 @@ def minhash_lsh_pairs(
     )
 
 
-def _truncate_lineage(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Per-iteration lineage cut for fixed-point operators.
-
-    Default is ``localCheckpoint`` (eager): executor-local storage, no HDFS
-    round-trip — right for local mode and fault-tolerant-enough short runs.
-    On a real cluster executor loss destroys a local checkpoint and kills
-    the job, so callers pass ``checkpoint_dir`` to switch to reliable
-    ``checkpoint()`` (persisted to the configured fault-tolerant FS).
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() != checkpoint_dir:
-        sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint(eager=True)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components of an undirected edge list → (node, component).
 
@@ -368,17 +351,20 @@ def connected_components(
     joins — the same two-exchanges-per-round cost as the textbook
     groupBy-emit formulation, but with the map-side combine and without
     a sort, and high-degree hubs never pass through any collected
-    neighbor list (§2 skew). Lineage is truncated once per round (lazy
-    localCheckpoint whose materializing action IS the convergence count
-    — one Spark job per round; reliable ``checkpoint()`` when
-    ``checkpoint_dir`` is given). Self-loop-only nodes re-enter as
+    neighbor list (§2 skew). Lineage is truncated once per round by a
+    lazy ``cut_lineage`` whose materializing action IS the convergence
+    count — one Spark job per round (a session with a checkpoint
+    directory writes the cut reliably first, then counts it).
+    Self-loop-only nodes re-enter as
     singletons at label extraction; the input relation is consumed
     exactly once (the canonical projection is what gets checkpointed).
     """
-    e0 = edges.select(
-        F.greatest(F.col(src), F.col(dst)).alias("u"),
-        F.least(F.col(src), F.col(dst)).alias("v"),
-    ).localCheckpoint(eager=False)
+    e0 = cut_lineage(
+        edges.select(
+            F.greatest(F.col(src), F.col(dst)).alias("u"),
+            F.least(F.col(src), F.col(dst)).alias("v"),
+        )
+    )
     loops = e0.filter(F.col("u") == F.col("v")).select("u")
     e = e0.filter(F.col("u") != F.col("v"))
     for _ in range(max_iter):
@@ -416,7 +402,8 @@ def connected_components(
             F.col("m2").alias("nv"),
             (F.col("chg") | (F.col("v") != F.col("m2"))).alias("chg"),
         ).select(F.col("nu").alias("u"), F.col("nv").alias("v"), "chg")
-        ss, changed = _cut_and_probe(ss, checkpoint_dir, F.col("chg"))
+        ss = cut_lineage(ss)
+        changed = ss.filter(F.col("chg")).count()
         e = ss.select("u", "v")
         if changed == 0:
             break
@@ -432,27 +419,7 @@ def connected_components(
         .union(e.select(F.col("v").alias("node"), F.col("v").alias("comp")))
         .union(loops.select(F.col("u").alias("node"), F.col("u").alias("comp")))
     )
-    labels = nodes.groupBy("node").agg(F.min("comp").alias("comp"))
-    if checkpoint_dir is None:
-        return labels.localCheckpoint(eager=False)
-    return _truncate_lineage(labels, checkpoint_dir)
-
-
-def _cut_and_probe(df: DataFrame, checkpoint_dir: str | None, changed_pred):
-    """Truncate a fixed-point iterate's lineage AND count rows matching
-    ``changed_pred`` in one Spark job.
-
-    Local mode: lazy localCheckpoint + full-scan count — the count
-    materializes every partition, completing the checkpoint as a side
-    effect. Reliable mode: ``checkpoint()`` is eager by contract, so the
-    probe is a scan of already-checkpointed data.
-    """
-    if checkpoint_dir is None:
-        df = df.localCheckpoint(eager=False)
-    else:
-        df = _truncate_lineage(df, checkpoint_dir)
-    changed = df.filter(changed_pred).count()
-    return df, changed
+    return cut_lineage(nodes.groupBy("node").agg(F.min("comp").alias("comp")))
 
 
 def connected_components_incremental(
@@ -461,7 +428,6 @@ def connected_components_incremental(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fold a NEW edge batch into an existing (node, comp) labeling →
     updated (node, comp), identical to re-running ``connected_components``
@@ -486,9 +452,7 @@ def connected_components_incremental(
     # new_edges if the batch touches them; if not, they stay their own
     # component — re-appended after propagation.
     combined = stars.unionByName(new_edges.select(src, dst))
-    updated = connected_components(
-        combined, src, dst, max_iter=max_iter, checkpoint_dir=checkpoint_dir
-    )
+    updated = connected_components(combined, src, dst, max_iter=max_iter)
     singletons = labels.filter(F.col("node") == F.col("comp")).join(
         updated.select(F.col("node").alias("_n")),
         F.col("node") == F.col("_n"),
@@ -689,9 +653,9 @@ def dedup_against_store(
 
     store = read_warehouse_table(spark, warehouse_dir, table)
     posts = read_warehouse_table(spark, warehouse_dir, f"{table}_bands")
-    fp = document_fingerprints(
-        new_docs, id_col, text_col, ngram, num_hashes
-    ).localCheckpoint(eager=False)  # probed three times below
+    fp = cut_lineage(  # probed three times below
+        document_fingerprints(new_docs, id_col, text_col, ngram, num_hashes)
+    )
 
     exact = (
         store.select("content_hash", F.col("doc_id").alias("match_id"))

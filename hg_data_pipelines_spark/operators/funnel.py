@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import cut_lineage
+
 
 def funnel_user_times(
     events: DataFrame,
@@ -64,9 +66,7 @@ def funnel_user_times(
         "         AND (j = 0 OR element_at(acc, j) IS NOT NULL)"
         "        THEN e.t ELSE a END))"
     )
-    return per_key.select(
-        *keys, F.expr(fold).alias("ts_arr")
-    ).localCheckpoint(eager=False)
+    return cut_lineage(per_key.select(*keys, F.expr(fold).alias("ts_arr")))
 
 
 def funnel_stage_times(

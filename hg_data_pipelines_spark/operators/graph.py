@@ -15,7 +15,7 @@ Scale design: one shuffle per iteration (the contribution groupBy on
 dst); the out-degree table joins in once up front; the node-count scalar
 rides along as a broadcast 1-row cross join, never a driver collect.
 Iterations extend the lazy plan — for deep runs (n_iter >> 10) callers
-should localCheckpoint between rounds like
+should ``session.cut_lineage`` between rounds like
 ``operators.dedup.connected_components`` does; at the 3-5 iterations
 that rank stabilizes for dedup-quality propagation, plan growth is fine.
 """
@@ -23,6 +23,8 @@ that rank stabilizes for dedup-quality propagation, plan growth is fine.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import cut_lineage
 
 SCALE = 10**15
 
@@ -34,7 +36,6 @@ def pagerank_fixed_point(
     n_iter: int = 4,
     damping_num: int = 85,
     damping_den: int = 100,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list → (node, rank_scaled BIGINT).
 
@@ -43,18 +44,17 @@ def pagerank_fixed_point(
     Nodes are the union of sources and destinations; every node gets the
     teleport mass even with zero in-edges.
 
-    ``checkpoint_dir`` switches the per-iteration lineage cut from
-    executor-local storage to a reliable ``checkpoint()`` in that
-    directory — required for deep runs on real clusters, where losing an
-    executor destroys a local checkpoint. Integer arithmetic makes both
-    modes bit-identical (pytest asserts it).
+    The edge and node tables are lineage-cut once up front; iterations
+    extend the plan without a per-round cut (see the module docstring).
+    A session with a checkpoint directory stores those cuts reliably;
+    integer arithmetic makes both modes bit-identical (pytest asserts
+    it).
     """
-    from .dedup import _truncate_lineage
     # Truncate the edge lineage once: the edge subtree would otherwise be
     # embedded (and risk re-execution) in every iteration's plan — costly
     # when edges come from an expensive derivation like the k-NN kernel.
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).localCheckpoint(
-        eager=False
+    e = cut_lineage(
+        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
     )
     nodes = (
         e.select(F.col("_src").alias("node"))
@@ -67,10 +67,10 @@ def pagerank_fixed_point(
     # iteration's plan, and without the cut Catalyst re-evaluates their
     # whole subtree (scan + distinct / degree shuffle) per iteration —
     # n_iter× wasted work that the checkpoint turns into a cache read.
-    nodes_nn = nodes.crossJoin(F.broadcast(n_nodes)).localCheckpoint(eager=False)
+    nodes_nn = cut_lineage(nodes.crossJoin(F.broadcast(n_nodes)))
 
     outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
-    e_deg = e.join(outdeg, "_src").localCheckpoint(eager=False)
+    e_deg = cut_lineage(e.join(outdeg, "_src"))
 
     base = F.expr(
         f"(({damping_den - damping_num} * ({SCALE} DIV _nn)) DIV {damping_den})"
@@ -96,8 +96,6 @@ def pagerank_fixed_point(
                 ).alias("rank_scaled"),
             )
         )
-        if checkpoint_dir is not None:
-            ranks = _truncate_lineage(ranks, checkpoint_dir)
     return ranks.select("node", "rank_scaled")
 
 
@@ -108,7 +106,6 @@ def shortest_paths_bounded(
     dst: str = "dst",
     weight: str = "w",
     rounds: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Bounded-hop single-source shortest paths → (node, dist_scaled).
 
@@ -127,12 +124,12 @@ def shortest_paths_bounded(
     the distance table per round — O(rounds) constant-size plans, same
     contract as ``connected_components``.
     """
-    from .dedup import _truncate_lineage
-
-    e = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst"),
-        F.col(weight).alias("_w"),
-    ).localCheckpoint(eager=False)
+    e = cut_lineage(
+        edges.select(
+            F.col(src).alias("_src"), F.col(dst).alias("_dst"),
+            F.col(weight).alias("_w"),
+        )
+    )
     dist = e.sparkSession.createDataFrame(
         [(int(source), 0)], "node long, dist_scaled long"
     )
@@ -146,7 +143,7 @@ def shortest_paths_bounded(
             .groupBy("node")
             .agg(F.min("dist_scaled").alias("dist_scaled"))
         )
-        dist = _truncate_lineage(dist, checkpoint_dir)
+        dist = cut_lineage(dist, eager=True)
     return dist
 
 
@@ -159,7 +156,6 @@ def personalized_pagerank_fixed_point(
     n_iter: int = 4,
     damping_num: int = 85,
     damping_den: int = 100,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass restarts ONLY at the seed
     set → (node, rank_scaled BIGINT). Rank concentrates around the
@@ -171,10 +167,8 @@ def personalized_pagerank_fixed_point(
     partitioning); same per-iteration cost shape (one shuffle on the
     contribution groupBy). Nodes outside every seed's reach keep rank 0.
     """
-    from .dedup import _truncate_lineage
-
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).localCheckpoint(
-        eager=False
+    e = cut_lineage(
+        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
     )
     nodes = (
         e.select(F.col("_src").alias("node"))
@@ -183,13 +177,12 @@ def personalized_pagerank_fixed_point(
     )
     sd = seeds.select(F.col(seed_col).alias("node")).distinct()
     n_seeds = sd.agg(F.count(F.lit(1)).alias("_ns"))
-    nodes_s = (
+    nodes_s = cut_lineage(
         nodes.join(sd.withColumn("_is_seed", F.lit(1)), "node", "left")
         .crossJoin(F.broadcast(n_seeds))
-        .localCheckpoint(eager=False)
     )
     outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
-    e_deg = e.join(outdeg, "_src").localCheckpoint(eager=False)
+    e_deg = cut_lineage(e.join(outdeg, "_src"))
 
     seed_base = F.expr(
         f"CASE WHEN _is_seed = 1 THEN ({SCALE} DIV _ns) ELSE 0L END"
@@ -219,8 +212,6 @@ def personalized_pagerank_fixed_point(
                 ).alias("rank_scaled"),
             )
         )
-        if checkpoint_dir is not None:
-            ranks = _truncate_lineage(ranks, checkpoint_dir)
     return ranks.select("node", "rank_scaled")
 
 
@@ -245,23 +236,21 @@ def kcore_peel(
     ``edges`` are undirected pairs (id_a, id_b), no self-loops; each
     pair once (the peel symmetrizes internally).
     """
-    und = (
+    # cut the edge-derivation lineage once, then once per round:
+    # each round references the live edge set three times (degree,
+    # src-keep, dst-keep) — without truncation the lazy plan
+    # re-embeds the whole subtree 3^rounds times.
+    und = cut_lineage(
         edges.selectExpr("id_a AS src", "id_b AS dst")
         .unionAll(edges.selectExpr("id_b AS src", "id_a AS dst"))
-        # cut the edge-derivation lineage once, then once per round:
-        # each round references the live edge set three times (degree,
-        # src-keep, dst-keep) — without truncation the lazy plan
-        # re-embeds the whole subtree 3^rounds times.
-        .localCheckpoint(eager=False)
     )
     for _ in range(rounds):
         deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
         keep = deg.filter(F.col("_deg") >= k).select("src")
-        und = (
+        und = cut_lineage(
             und.join(keep, "src")
             .join(keep.withColumnRenamed("src", "dst"), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
         )
     return (
         und.groupBy(F.col("src").alias("node"))
@@ -285,16 +274,18 @@ def _orient_edges(und: DataFrame, degree_ordered: bool) -> DataFrame:
     Lineage: the orientation references the edge set up to 3 times
     (degree agg + two degree joins) and callers reference the RESULT up
     to 3 more times (both wedge sides, closure probe); both levels are
-    localCheckpoint-truncated so the caller's edge-derivation subtree
+    lineage-cut so the caller's edge-derivation subtree
     (for the ANN census, the full LSH pipeline) computes once, not 6×.
     """
-    und = und.localCheckpoint(eager=False)
+    und = cut_lineage(und)
     if not degree_ordered:
-        return und.select(
-            F.col("a").alias("src"),
-            F.col("b").alias("dst"),
-            F.col("b").alias("key_dst"),
-        ).localCheckpoint(eager=False)
+        return cut_lineage(
+            und.select(
+                F.col("a").alias("src"),
+                F.col("b").alias("dst"),
+                F.col("b").alias("key_dst"),
+            )
+        )
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
@@ -310,13 +301,15 @@ def _orient_edges(und: DataFrame, degree_ordered: bool) -> DataFrame:
     a_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
-    return withdeg.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-        F.when(a_first, F.col("deg_b"))
-        .otherwise(F.col("deg_a"))
-        .alias("key_dst"),
-    ).localCheckpoint(eager=False)
+    return cut_lineage(
+        withdeg.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
+            F.when(a_first, F.col("deg_b"))
+            .otherwise(F.col("deg_a"))
+            .alias("key_dst"),
+        )
+    )
 
 
 def _oriented_triangles(oriented: DataFrame) -> DataFrame:
@@ -415,12 +408,12 @@ def label_propagation(und: DataFrame, iters: int = 3) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    und = und.localCheckpoint(eager=False)
-    dir_ = und.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    ).localCheckpoint(eager=False)
+    und = cut_lineage(und)
+    dir_ = cut_lineage(
+        und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
+            und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
+        )
+    )
     labels = dir_.select("node").distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -434,10 +427,9 @@ def label_propagation(und: DataFrame, iters: int = 3) -> DataFrame:
         counts = nbr_labels.groupBy("node", "label").agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        labels = (
+        labels = cut_lineage(
             counts.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("node", "label")
-            .localCheckpoint(eager=False)
         )
     return labels

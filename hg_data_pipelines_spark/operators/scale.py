@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import cut_lineage
+
 
 def salted_join(
     left: DataFrame,
@@ -274,7 +276,7 @@ def _range_pinned(df: DataFrame, order_by: list, n_parts: int | None = None) -> 
     """Range-partition ``df`` on a total order and pin the layout.
 
     Returns ``df`` with a ``_pid`` column = the range-partition index.
-    ``localCheckpoint(eager=False)`` materializes the partitioning at
+    A lazy ``cut_lineage`` materializes the partitioning at
     first use, so every downstream branch (per-partition offsets AND the
     main pass) sees the SAME pid assignment — without it a recomputation
     could re-sample different range boundaries. Partition count defaults
@@ -287,12 +289,11 @@ def _range_pinned(df: DataFrame, order_by: list, n_parts: int | None = None) -> 
     # the real shuffle would otherwise each recompute the upstream plan
     # (e.g. a tokenize projection) from scratch — the input here is always
     # a slim projection, so caching it costs little and halves the work
-    pinned_in = df.localCheckpoint(eager=False)
-    return (
+    pinned_in = cut_lineage(df)
+    return cut_lineage(
         pinned_in.repartitionByRange(n, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
     )
 
 

@@ -60,7 +60,7 @@ def scd2_apply(
     Long fold chains: each apply nests the previous result's plan — in a
     real nightly job ``current`` is a warehouse table read back per run
     (a natural lineage cut), so plans stay constant-size; when chaining
-    many folds in one session, localCheckpoint the result between folds
+    many folds in one session, ``cut_lineage`` the result between folds
     (the ``connected_components`` contract).
 
     Shuffle shape (round-10 tightening): the per-key first-timestamp

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cut_lineage
+
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
     " cast(0.0 as double), (acc, v) -> acc + v)"
@@ -647,7 +649,7 @@ def knn_graph_blocked(
             )
 
     assigned = v.mapInPandas(assign, schema=assign_schema)
-    assigned = assigned.localCheckpoint(eager=True)  # reused by 3 phases
+    assigned = cut_lineage(assigned, eager=True)  # reused by 3 phases
 
     # bounded collect: P rows of (cell, radius)
     radius = np.zeros(P)
@@ -1343,7 +1345,7 @@ def graph_beam_search(
     the FINAL round's joins un-checkpointed (the last beam is assumed to
     be consumed exactly once — its checkpoint job would be pure
     overhead). A caller that fans the result into multiple branches
-    (union/join audits) should ``localCheckpoint`` it first, or every
+    (union/join audits) should ``cut_lineage`` it first, or every
     branch re-executes the final round.
 
     Semantics (deterministic, engine-replayable):
@@ -1384,14 +1386,18 @@ def graph_beam_search(
     # not-yet-materialized lazy checkpoint — it re-executes the lineage,
     # so a lazy edge relation re-runs the whole LSH edge build once per
     # round (measured at 10x: 67s -> 31s from this flip alone).
-    cv = corpus.select(
-        F.col(id_col).alias("node_id"),
-        F.col(vec_col).alias("_cv"),
-        _self_dot(vec_col).alias("_cn"),
-    ).localCheckpoint(eager=True)
-    e = edges.select(
-        F.col("src").alias("_src"), F.col("dst").alias("_dst")
-    ).localCheckpoint(eager=True)
+    cv = cut_lineage(
+        corpus.select(
+            F.col(id_col).alias("node_id"),
+            F.col(vec_col).alias("_cv"),
+            _self_dot(vec_col).alias("_cn"),
+        ),
+        eager=True,
+    )
+    e = cut_lineage(
+        edges.select(F.col("src").alias("_src"), F.col("dst").alias("_dst")),
+        eager=True,
+    )
     seeds = (
         corpus.select(F.col(id_col).alias("node_id"))
         .orderBy("node_id")
@@ -1408,7 +1414,7 @@ def graph_beam_search(
     # join); eager-checkpoint it once so each round's build reads the
     # materialized |Q|-row relation instead of re-running the query-side
     # scan + norm fold (r12 — same rationale as cv/e above).
-    qv = qv.localCheckpoint(eager=True)
+    qv = cut_lineage(qv, eager=True)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "node_id")
     for r in range(rounds):
         frontier = (
@@ -1446,7 +1452,7 @@ def graph_beam_search(
         # beam is consumed exactly once (the final top-k), so its
         # checkpoint job is pure overhead and is skipped (r12).
         if r < rounds - 1:
-            beam_df = beam_df.localCheckpoint(eager=True)
+            beam_df = cut_lineage(beam_df, eager=True)
     return (
         beam_df.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)

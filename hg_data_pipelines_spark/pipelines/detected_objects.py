@@ -5,7 +5,7 @@ Reference chain (detected_objects_processing.py:17-28):
 class-name dict map → per-row uuid → polygon→WKT → DuckDB table.
 
 Spark-first translation: JSON source with enforced schema (S1) → explode
-(N1) → broadcast dim join (J2) → ``uuid()`` (P3) → WKT pandas UDF (P4) →
+(N1) → broadcast dim join (J2) → ``uuid()`` (P3) → WKT Arrow UDF (P4) →
 Parquet warehouse sink (S9, DuckDB-attachable). Every step is lazy; Catalyst
 prunes the JSON projection to the read columns.
 
@@ -16,30 +16,22 @@ repartition — this pipeline is embarrassingly parallel at 100 TB.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from ..functions.wkt import polygon_to_wkt
 from ..io import class_dim, read_results_json
 
 
-@pandas_udf(T.StringType())
-def _wkt_udf(coords_json: pd.Series) -> pd.Series:
-    # coords arrive as a JSON string (to_json JVM-side), not as a nested
-    # Arrow list: pyarrow segfaults converting an all-null
-    # array<array<array<double>>> batch to pandas, and a partition whose
-    # polygons are all absent is a legal input.
-    import json
-
-    def _one(s):
-        if s is None:
-            return "POLYGON EMPTY"
-        return polygon_to_wkt(json.loads(s))
-
-    return coords_json.map(_one)
+@arrow_udf(T.StringType())
+def _wkt_udf(coords: pa.Array) -> pa.Array:
+    # An Arrow UDF (EXT-U13): the typed rings stay Arrow lists, no pandas
+    # conversion, so an all-null batch is as legal as any other; a null
+    # polygon falls through ``polygon_to_wkt`` to ``POLYGON EMPTY``.
+    return pa.array([polygon_to_wkt(c) for c in coords.to_pylist()], pa.string())
 
 
 def build_detected_objects(
@@ -63,7 +55,7 @@ def build_detected_objects(
     out = named.select(
         "file_name",
         "bbox",
-        _wkt_udf(F.to_json(F.col("polygon.coordinates"))).alias("polygon"),
+        _wkt_udf("polygon.coordinates").alias("polygon"),
         "score",
         "class",
         "class_name",

@@ -13,9 +13,7 @@ Spark-first translation:
 - the parallel arrays (bboxes/labels/scores/masks) zip positionally via
   ``arrays_zip``+``posexplode`` (J3) — no Python loop;
 - inverse projection runs vectorized per Arrow batch in ``mapInPandas``
-  (U3 kernels); polygons cross the Arrow boundary as JSON strings and are
-  cast to the GeoJSON struct JVM-side with ``from_json`` (pyarrow cannot
-  move all-null deep-nested lists);
+  (U3 kernels), which emits the typed GeoJSON polygon struct directly;
 - the per-photo nested rebuild is ``collect_list(struct(...))`` ordered by
   (theta, position) — a deterministic total order where the reference
   inherited ``os.listdir`` order (SURVEY.md §7.2 determinism rule);
@@ -29,7 +27,6 @@ collected array stays small.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 import numpy as np
@@ -39,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geometry as G
+from ..schemas import GEOJSON_POLYGON
 
 FOV = 60.0  # reference: street_level_grouping.py:37-40
 PHI = -10.0
@@ -51,7 +49,7 @@ _PROJECTED = T.StructType(
         T.StructField("theta", T.IntegerType()),
         T.StructField("pos", T.IntegerType()),
         T.StructField("bbox", T.ArrayType(T.DoubleType())),
-        T.StructField("polygon_json", T.StringType()),
+        T.StructField("polygon", GEOJSON_POLYGON),
         T.StructField("score", T.DoubleType()),
         T.StructField("class", T.IntegerType()),
     ]
@@ -64,7 +62,7 @@ def _project_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             yield pd.DataFrame({f.name: [] for f in _PROJECTED.fields})
             continue
         out = {k: [] for k in
-               ("photo_stem", "theta", "pos", "bbox", "polygon_json", "score", "class")}
+               ("photo_stem", "theta", "pos", "bbox", "polygon", "score", "class")}
         for theta, sub in pdf.groupby("theta"):
             bboxes = np.array([list(b) for b in sub["bbox"]], dtype=np.float64)
             inv = G.bbox_inverse(
@@ -95,7 +93,7 @@ def _project_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         if pts[0] != pts[-1]:
                             pts.append(pts[0])  # shapely mapping closes the ring
                         poly = {"type": "Polygon", "coordinates": [pts]}
-                out["polygon_json"].append(json.dumps(poly) if poly else None)
+                out["polygon"].append(poly)
         yield pd.DataFrame(out)
 
 
@@ -135,15 +133,9 @@ def build_results(
         F.lit(pano_height).alias("pano_h"),
     )
 
-    projected = parsed.mapInPandas(_project_batch, _PROJECTED)
-
-    from ..schemas import GEOJSON_POLYGON
-
-    with_poly = projected.withColumn(
-        "polygon", F.from_json("polygon_json", GEOJSON_POLYGON)
-    )
     return (
-        with_poly.groupBy("photo_stem")
+        parsed.mapInPandas(_project_batch, _PROJECTED)
+        .groupBy("photo_stem")
         .agg(
             F.array_sort(
                 F.collect_list(

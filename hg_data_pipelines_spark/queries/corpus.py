@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..session import cut_lineage
 from .common import load, query
 
 # Same tokenizer contract as queries/text.py: whitespace split of trimmed
@@ -1255,10 +1256,10 @@ def bigram_nll_score(spark, sf_dir):
     from ..functions.text import tokens
 
     docs = load(spark, sf_dir, "documents", scan_parallel=True)
-    t = docs.select("doc_id", tokens("text").alias("toks")).localCheckpoint(
-        eager=False
-    )
-    bg = (
+    t = cut_lineage(docs.select("doc_id", tokens("text").alias("toks")))
+    # pinned: bg feeds the two count aggregations AND the scoring
+    # join — without the cut the bigram explode re-evaluates 3x
+    bg = cut_lineage(
         t.filter(F.size("toks") >= 2)
         .select(
             "doc_id",
@@ -1271,9 +1272,6 @@ def bigram_nll_score(spark, sf_dir):
             ).alias("b"),
         )
         .select("doc_id", "b.w1", "b.w2")
-        # pinned: bg feeds the two count aggregations AND the scoring
-        # join — without the cut the bigram explode re-evaluates 3x
-        .localCheckpoint(eager=False)
     )
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("n"))
@@ -1770,11 +1768,9 @@ def vocab_drift_by_source(spark, sf_dir):
     glob = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     # 100 rows; eager checkpoint so the binning join and the bin axis
     # don't each re-run the vocabulary aggregation
-    top = (
-        glob.orderBy(F.desc("c"), "token")
-        .limit(_VD_TOP)
-        .select("token")
-        .localCheckpoint(eager=True)
+    top = cut_lineage(
+        glob.orderBy(F.desc("c"), "token").limit(_VD_TOP).select("token"),
+        eager=True,
     )
     binned = tok.join(
         F.broadcast(top.withColumn("_is_top", F.lit(1))), "token", "left"
@@ -1787,10 +1783,11 @@ def vocab_drift_by_source(spark, sf_dir):
     # the ONLY corpus-sized aggregation; |sources|×101 rows after it, so
     # the eager checkpoint pins every downstream marginal to this result
     # instead of re-executing the explode per branch
-    sb = (
-        binned.groupBy("source", "bin")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_sb"))
-        .localCheckpoint(eager=True)
+    sb = cut_lineage(
+        binned.groupBy("source", "bin").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_sb")
+        ),
+        eager=True,
     )
     bins = top.select(F.col("token").alias("bin")).unionAll(
         spark.createDataFrame([("__OTHER__",)], "bin string")
@@ -2387,11 +2384,14 @@ def token_budget_mixture(spark, sf_dir):
     # eager checkpoint: every fill round hangs 1-row aggregates off this
     # relation — without truncation each would re-run the corpus rollup
     # (measured: plan dropped 23 -> 4 shuffles). Bounded: |sources| rows.
-    inv = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")).alias(
-            "avail"
-        )
-    ).localCheckpoint(eager=True)
+    inv = cut_lineage(
+        docs.groupBy("source").agg(
+            F.sum(F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")).alias(
+                "avail"
+            )
+        ),
+        eager=True,
+    )
     tot = inv.agg(
         F.expr("sum(avail) div 2").cast("bigint").alias("budget")
     )

@@ -18,6 +18,7 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_fingerprints,
 )
+from ..session import cut_lineage
 from .common import load, query
 
 # --------------------------------------------------------------------------
@@ -1623,12 +1624,10 @@ def winnowing_matches(spark, sf_dir):
         .distinct()
     )
     dfc = sel.groupBy("mh").agg(F.count(F.lit(1)).alias("ndocs"))
-    keep = (
+    keep = cut_lineage(  # referenced twice by the pair self-join
         sel.join(dfc, "mh")
         .filter(F.col("ndocs") <= _WINNOW_DF)
         .select("doc_id", "mh")
-        # referenced twice by the pair self-join
-        .localCheckpoint(eager=False)
     )
     sizes = keep.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nf"))
     a = keep.select(F.col("doc_id").alias("doc_a"), "mh")
@@ -1945,7 +1944,7 @@ def _band_tuning_oracle() -> str:
 @query("X2_lsh_band_tuning_report", _band_tuning_oracle())
 def lsh_band_tuning_report(spark, sf_dir):
     docs = load(spark, sf_dir, "documents", scan_parallel=True)
-    sig = _portable_sig(docs).localCheckpoint(eager=True)  # shared by 6 arms
+    sig = cut_lineage(_portable_sig(docs), eager=True)  # shared by 6 arms
     # ONE tagged relation instead of one self-join per layout: the (b, r)
     # config rides as grouping columns, so all six arms share a single
     # bucket join + distinct + verify join (12 -> ~4 shuffles; identical

@@ -14,6 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
+from ..session import cut_lineage
 from .common import dsum, load, query, sql_dsum, utc
 
 
@@ -1287,10 +1288,8 @@ def regression_aggs(spark, sf_dir):
 )
 def key_skew_profile(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
-    per_key = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # two branches below share one pass
+    per_key = cut_lineage(  # two branches below share one pass
+        ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     )
     # the ranked window only ever fed "rk = 1" and "rk <= 10" — both are
     # plain aggregates: top1 is MAX(n); the top-10 slice comes from
@@ -2206,15 +2205,17 @@ def rfm_segments(spark, sf_dir):
     orders = load(spark, sf_dir, "orders")
     # the per-customer rollup feeds the monetary-cut selection jobs AND
     # the final projection — truncate so it is computed once
-    cust = orders.groupBy("o_custkey").agg(
-        F.datediff(F.max("o_orderdate"), F.lit("1970-01-01").cast("date"))
-        .cast("bigint")
-        .alias("r_days"),
-        F.count(F.lit(1)).cast("bigint").alias("f_cnt"),
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("m_val"),
-    ).localCheckpoint(eager=False)
+    cust = cut_lineage(
+        orders.groupBy("o_custkey").agg(
+            F.datediff(F.max("o_orderdate"), F.lit("1970-01-01").cast("date"))
+            .cast("bigint")
+            .alias("r_days"),
+            F.count(F.lit(1)).cast("bigint").alias("f_cnt"),
+            F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
+            .cast("double")
+            .alias("m_val"),
+        )
+    )
     # m_val (a price SUM) is continuous — per customer it is near-unique,
     # so F.percentile's distinct-value buffer was |customer|-bounded on
     # one reducer (guide §5). The scan-bounded selection returns the four
@@ -2608,7 +2609,7 @@ def funnel_time_to_convert(spark, sf_dir):
         # each stage table feeds TWO consumers (its own pair delta and the
         # next stage's at-or-after gate) — truncate so the shrinking-join
         # chain computes each stage once (the semdedup/census pattern)
-        s.localCheckpoint(eager=False)
+        cut_lineage(s)
         for s in funnel_stage_times(ev, ["signup", "view", "click", "purchase"])
     ]
     pairs = []
@@ -2638,9 +2639,7 @@ def funnel_time_to_convert(spark, sf_dir):
     # percentile_cont; the delta union is lineage-truncated so the two
     # selection jobs and the final rollup share one computation of the
     # stage-join chain.
-    deltas = reduce(lambda x, y: x.unionByName(y), pairs).localCheckpoint(
-        eager=False
-    )
+    deltas = cut_lineage(reduce(lambda x, y: x.unionByName(y), pairs))
     qs = percentile_cont_exact_grouped(deltas, "pair", "d_us", [0.5, 0.9])
 
     def q_expr(i):

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import SCALE, pagerank_fixed_point
 from ..operators.similarity import knn_graph_blocked
+from ..session import cut_lineage
 from .common import load, query
 from .similarity import _KNN_K, _SQL_COSINE
 
@@ -760,13 +761,12 @@ def modularity_report(spark, sf_dir):
     knn = knn_graph_blocked(emb, k=_KNN_K).select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
     )
-    und = (
+    und = cut_lineage(  # shared by LPA, degrees, intra
         knn.select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # shared by LPA, degrees, intra
+        ).distinct(),
+        eager=True,
     )
     lab = label_propagation(und, iters=_LPA_ITERS)
     dirr = und.select(F.col("a").alias("node")).unionByName(

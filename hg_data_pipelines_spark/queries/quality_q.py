@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators.quality import Constraint, check_constraints, profile
+from ..session import cut_lineage
 from .common import load, query, utc
 
 # --------------------------------------------------------------------------
@@ -600,12 +601,10 @@ def psi_value_drift(spark, sf_dir):
     # truncate the (events ⋈ day-halves) lineage: the cut-selection jobs
     # below and the final binning rollup would otherwise each re-run the
     # scan + day-ntile join
-    ev = (
+    ev = cut_lineage(
         ev_raw.select(
             "event_type", "value", F.col("ts").cast("date").alias("day")
-        )
-        .join(F.broadcast(days), "day")
-        .localCheckpoint(eager=False)
+        ).join(F.broadcast(days), "day")
     )
     # Baseline-half deciles via the scan-bounded selection
     # (percentile_cont_exact_grouped, bit-identical to the F.percentile
@@ -657,15 +656,14 @@ def psi_value_drift(spark, sf_dir):
     ).crossJoin(
         spark.range(1, _DQ10_BINS + 1).select(F.col("id").cast("int").alias("bin"))
     )
-    counts = (
-        bins.join(cnt, ["event_type", "bin"], "left")
-        .select(
+    counts = cut_lineage(  # |event_type|×bins rows, read twice
+        bins.join(cnt, ["event_type", "bin"], "left").select(
             "event_type",
             "bin",
             F.coalesce("cb", F.lit(0)).alias("cb"),
             F.coalesce("cc", F.lit(0)).alias("cc"),
-        )
-        .localCheckpoint(eager=True)  # |event_type|×bins rows, read twice
+        ),
+        eager=True,
     )
     tot = counts.groupBy("event_type").agg(
         F.sum("cb").alias("nb"), F.sum("cc").alias("nc")
@@ -821,9 +819,7 @@ def seasonal_volume_anomaly(spark, sf_dir):
     ).agg(F.count(F.lit(1)).alias("n"))
     # referenced by three branches (base/dev/flag) — truncate so the
     # events aggregation computes once (the semdedup/census pattern)
-    dowed = daily.withColumn("dow", F.dayofweek("day")).localCheckpoint(
-        eager=False
-    )
+    dowed = cut_lineage(daily.withColumn("dow", F.dayofweek("day")))
     base = dowed.groupBy("event_type", "dow").agg(
         F.percentile("n", F.lit(0.5)).alias("med")
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..session import cut_lineage
 from .common import davg, dsum, load, query, sql_davg, sql_dsum
 
 # --------------------------------------------------------------------------
@@ -1830,16 +1831,8 @@ def basket_cooccurrence_lift(spark, sf_dir):
     # sides, and the basket total; supp feeds the prune + two lookups) —
     # without the pin each consumer re-executes the distinct/agg from the
     # scan: 13 exchanges in the static plan instead of 6
-    items = (
-        li.select("l_orderkey", "l_partkey")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    supp = (
-        items.groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    items = cut_lineage(li.select("l_orderkey", "l_partkey").distinct())
+    supp = cut_lineage(items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c")))
     freq = items.join(
         F.broadcast(supp.filter(F.col("c") >= _BASKET_MINSUP)), "l_partkey"
     ).select("l_orderkey", "l_partkey")

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators.similarity import cosine_topk, lsh_topk
+from ..session import cut_lineage
 from .common import load, query
 
 _N_QUERIES = 20
@@ -1508,10 +1509,9 @@ def cosine_topk_ivf_portable(spark, sf_dir):
     ).select("vec_id", "cluster")
     # referenced twice below (query + candidate sides) — truncate so the
     # kmeans subtree computes once (the semdedup/census pattern)
-    v = (
+    v = cut_lineage(
         emb.join(labels, "vec_id")
         .select("vec_id", "cluster", "embedding", _self_dot("embedding").alias("_n"))
-        .localCheckpoint(eager=False)
     )
     q = v.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "cluster",
@@ -1663,14 +1663,12 @@ def mmr_rerank(spark, sf_dir):
     from ..operators.similarity import cosine_topk
 
     queries = emb.filter(F.col("vec_id") < _MMR_QUERIES)
-    cand = (
-        cosine_topk(queries, emb, k=_MMR_POOL)
-        .select(
+    cand = cut_lineage(
+        cosine_topk(queries, emb, k=_MMR_POOL).select(
             F.col("query_id").alias("qid"),
             F.col("neighbor_id").alias("cid"),
             F.col("cosine").alias("rel"),
         )
-        .localCheckpoint(eager=False)
     )
     from ..operators.similarity import _cosine
 
@@ -1678,14 +1676,13 @@ def mmr_rerank(spark, sf_dir):
     e2 = emb.select(F.col("vec_id").alias("c2"), F.col("embedding").alias("v2"))
     x = cand.select("qid", F.col("cid").alias("c1"))
     y = cand.select(F.col("qid").alias("q2"), F.col("cid").alias("c2"))
-    psim = (
+    psim = cut_lineage(
         x.join(y, (x["qid"] == y["q2"]) & (x["c1"] != y["c2"]))
         .join(e1, "c1")
         .join(e2, "c2")
         .select(
             "qid", "c1", "c2", F.round(_cosine("v1", "v2"), 6).alias("sim")
         )
-        .localCheckpoint(eager=False)
     )
     # Greedy MMR selection as ONE cogrouped map per qid (was a k-stage
     # join unroll — 30 shuffles, the registry's worst plan; judge advice
@@ -2188,10 +2185,9 @@ def cosine_topk_ivfpq_portable(spark, sf_dir):
 
     sd = _PQ_SUB
     emb = load(spark, sf_dir, "embeddings", scan_parallel="vector")
-    labels = (
+    labels = cut_lineage(  # referenced by both sides below
         kmeans_fixed_point(emb, k=_KMEANS_K, iters=_KMEANS_ITERS)
         .select("vec_id", "cluster")
-        .localCheckpoint(eager=False)  # referenced by both sides below
     )
     norm = _DOT.format(a="embedding", b="embedding")
     nv = emb.select(
@@ -2273,14 +2269,12 @@ def cosine_topk_ivfpq_portable(spark, sf_dir):
             f"element_at(sort_array(array({', '.join(structs)})), 1).c"
         )
 
-    coded = (
-        subbed.join(labels, "vec_id")
-        .select(
+    coded = cut_lineage(  # truncate the 128-dot expression tree
+        subbed.join(labels, "vec_id").select(
             F.col("vec_id").alias("neighbor_id"),
             "cluster",
             *[F.expr(code_expr(m)).alias(f"code{m}") for m in range(_PQ_M)],
         )
-        .localCheckpoint(eager=False)  # truncate the 128-dot expression tree
     )
 
     # query side: per-subspace LUT of codeword dots (map-side literals)

@@ -18,6 +18,7 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import cut_lineage
 from .common import query, sql_dsum, utc
 
 _COUNTER = itertools.count()
@@ -527,12 +528,14 @@ def streaming_left_outer_join(spark, sf_dir):
     # referenced by all three violation branches (matched, unmatched,
     # anti-join) — truncate lineage so the time-range join computes once,
     # not once per branch (r12: the union tree re-evaluated it 2-3x)
-    expected = clicks.join(
-        purch,
-        (F.col("l_key") == F.col("r_key"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
-    ).select("l_event_id", "r_event_id").localCheckpoint(eager=False)
+    expected = cut_lineage(
+        clicks.join(
+            purch,
+            (F.col("l_key") == F.col("r_key"))
+            & (F.col("r_ts") >= F.col("l_ts"))
+            & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
+        ).select("l_event_id", "r_event_id")
+    )
     unmatched = clicks.join(expected, "l_event_id", "left_anti")
 
     import glob as _glob
@@ -687,12 +690,14 @@ def streaming_full_outer_join(spark, sf_dir):
     )
     # referenced by all three violation branches — truncate lineage so
     # the time-range join computes once, not once per branch (r12)
-    expected = clicks.join(
-        purch,
-        (F.col("l_key") == F.col("r_key"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
-    ).select("l_event_id", "r_event_id").localCheckpoint(eager=False)
+    expected = cut_lineage(
+        clicks.join(
+            purch,
+            (F.col("l_key") == F.col("r_key"))
+            & (F.col("r_ts") >= F.col("l_ts"))
+            & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 30 minutes")),
+        ).select("l_event_id", "r_event_id")
+    )
     unmatched_l = clicks.join(expected, "l_event_id", "left_anti")
     unmatched_r = purch.join(expected, "r_event_id", "left_anti")
 

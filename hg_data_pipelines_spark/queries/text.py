@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import cut_lineage
 from .common import load, query
 
 # Tokens: whitespace split of trimmed text (documents are space-separated
@@ -892,13 +893,13 @@ def _bm25_scored(spark, sf_dir):
     # pin the tf table: it feeds BOTH the stats aggregate and the scoring
     # pass — without the cut the tokenize+filter projection (the dominant
     # cost) re-evaluates once per consumer
-    d = docs.select(
-        "doc_id", tokens("text").alias("toks")
-    ).select(
-        "doc_id",
-        F.size("toks").alias("dl"),
-        *[_tf(t).alias(f"tf{i}") for i, t in enumerate(_BM25_TERMS)],
-    ).localCheckpoint(eager=False)
+    d = cut_lineage(
+        docs.select("doc_id", tokens("text").alias("toks")).select(
+            "doc_id",
+            F.size("toks").alias("dl"),
+            *[_tf(t).alias(f"tf{i}") for i, t in enumerate(_BM25_TERMS)],
+        )
+    )
     stats = d.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("dl").alias("sum_dl"),

@@ -4,13 +4,16 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
 config block is what we would ship to a 1000-executor cluster — AQE on,
 adaptive skew-join handling, Arrow for every pandas-UDF boundary, and
 shuffle partitions sized by the caller (32 locally; thousands at 100 TB).
+
+``cut_lineage`` is the package's one lineage-cut primitive: call sites
+decide WHERE a cut happens, the session decides WHERE it is stored.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -24,6 +27,13 @@ def get_spark(
     Scale posture: every knob here is per-deployment, not per-query.
     At 100 TB the same plan code runs; only ``shuffle_partitions`` (≈2-3×
     total cores, or AQE-coalesced) and executor sizing change.
+
+    Lineage cuts (``cut_lineage``) are executor-local by default. A
+    deployment that must survive executor loss passes
+    ``extra_conf={"spark.checkpoint.dir": <fault-tolerant path>}`` (or
+    calls ``SparkContext.setCheckpointDir``); every cut in the package
+    then becomes a reliable checkpoint in that directory. The setting is
+    read at session start: ``spark.conf.set`` cannot change it later.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -72,3 +82,21 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Truncate ``df``'s lineage — the package's only checkpoint call.
+
+    The caller chooses ``eager`` (cut now in its own job, or lazily
+    when the first action computes ``df``); the session chooses the
+    storage. Without a checkpoint directory the cut is a
+    ``localCheckpoint``: executor-local blocks, no file-system round
+    trip, lost with the executor. With one (``spark.checkpoint.dir`` at
+    session start, or ``SparkContext.setCheckpointDir``) it is a reliable
+    ``checkpoint()`` written there, and always eager — a lazy reliable
+    checkpoint recomputes its input in a second job after the first
+    action.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=eager)

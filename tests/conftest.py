@@ -14,6 +14,27 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def reliable_cuts(spark, tmp_path):
+    """Reliable lineage cuts for the rest of one test.
+
+    Calling the fixture's value sets the session's checkpoint directory,
+    so every ``cut_lineage`` writes a reliable checkpoint there, and
+    returns that directory. Teardown clears it again: ``spark`` is
+    session-scoped, and a directory left set would make every later
+    test's cuts reliable.
+    """
+    sc = spark.sparkContext
+    ckpt = tmp_path / "ckpt"
+
+    def enable():
+        sc.setCheckpointDir(str(ckpt))
+        return ckpt
+
+    yield enable
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -33,23 +33,23 @@ class TestConnectedComponents:
         got = _cc(spark, [(7, 7)])
         assert got == {(7, 7)}
 
-    def test_reliable_checkpoint_mode_identical(self, spark, tmp_path):
-        # checkpoint_dir switches localCheckpoint -> reliable checkpoint();
-        # labels must be identical in both modes.
+    def test_reliable_checkpoint_mode_identical(self, spark, reliable_cuts):
+        # a session checkpoint directory switches every cut from
+        # localCheckpoint to a reliable checkpoint(); labels must be
+        # identical in both modes.
         edges = [(i, i + 1) for i in range(8)] + [(20, 21), (21, 22)]
         df = spark.createDataFrame(edges, ["id_a", "id_b"])
         local = {
             (r["node"], r["comp"]) for r in connected_components(df).collect()
         }
+        ckpt = reliable_cuts()
         reliable = {
-            (r["node"], r["comp"])
-            for r in connected_components(
-                df, checkpoint_dir=str(tmp_path / "ckpt")
-            ).collect()
+            (r["node"], r["comp"]) for r in connected_components(df).collect()
         }
         assert local == reliable
-        # the reliable checkpoint actually wrote to the requested dir
-        assert any((tmp_path / "ckpt").iterdir())
+        # the reliable checkpoint actually wrote to the session's dir
+        assert any(ckpt.iterdir())
+        assert list(ckpt.glob("*/rdd-*"))
 
 
 class TestIncrementalFingerprintStore:

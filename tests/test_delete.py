@@ -60,6 +60,21 @@ class TestDeleteFromWarehouseTable:
         # d2 contains no deleted key -> its files were never rewritten
         assert _mtimes(untouched) == before
 
+    def test_reliable_cuts_delete(self, spark, tmp_path, reliable_cuts):
+        # with a session checkpoint directory the pinned remainder is a
+        # reliable checkpoint: the rewrite reads it, not the files it
+        # replaces
+        wh, path = self._seed(spark, tmp_path)
+        ckpt = reliable_cuts()
+        keys = spark.createDataFrame([(2,)], "id long")
+        _, n = delete_from_warehouse_table(
+            spark, wh, "t", keys, ["id"], partition_by=["day"]
+        )
+        assert n == 2
+        assert _rows(path) == {(1, 10.0, "d1"), (3, 30.0, "d2")}
+        assert not os.path.isdir(os.path.join(path, "day=d3"))
+        assert list(ckpt.glob("*/rdd-*"))
+
     def test_fully_emptied_partition_directory_is_removed(
         self, spark, tmp_path
     ):

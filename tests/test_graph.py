@@ -46,23 +46,23 @@ class TestPagerankFixedPoint:
         # node 1 has no in-edges: exactly the teleport base term
         assert got[1] == (15 * (SCALE // 2)) // 100
 
-    def test_reliable_checkpoint_mode_identical(self, spark, tmp_path):
-        # per-iteration reliable checkpoint must not change a single rank
-        # unit (integer arithmetic is layout- and lineage-invariant)
+    def test_reliable_checkpoint_mode_identical(self, spark, reliable_cuts):
+        # reliable cuts must not change a single rank unit (integer
+        # arithmetic is layout- and lineage-invariant)
         edges = [(i, (i * 7) % 23) for i in range(23)] + [(i, i + 1) for i in range(22)]
         df = spark.createDataFrame(edges, ["src", "dst"])
         base = {
             r["node"]: r["rank_scaled"]
             for r in pagerank_fixed_point(df, n_iter=4).collect()
         }
+        ckpt_dir = reliable_cuts()
         ckpt = {
             r["node"]: r["rank_scaled"]
-            for r in pagerank_fixed_point(
-                df, n_iter=4, checkpoint_dir=str(tmp_path / "ckpt")
-            ).collect()
+            for r in pagerank_fixed_point(df, n_iter=4).collect()
         }
         assert base == ckpt
-        assert any((tmp_path / "ckpt").iterdir())
+        assert any(ckpt_dir.iterdir())
+        assert list(ckpt_dir.glob("*/rdd-*"))
 
 
 class TestShortestPathsBounded:
@@ -114,6 +114,16 @@ class TestShortestPathsBounded:
         }
         assert a == b
 
+    def test_reliable_checkpoint_mode_identical(self, spark, reliable_cuts):
+        edges = [(i, i + 1, i % 3 + 1) for i in range(1, 30)] + [
+            (1, 15, 7), (15, 29, 4)
+        ]
+        local = self._sp(spark, edges, source=1, rounds=6)
+        ckpt = reliable_cuts()
+        reliable = self._sp(spark, edges, source=1, rounds=6)
+        assert local == reliable
+        assert list(ckpt.glob("*/rdd-*"))
+
 
 class TestPersonalizedPagerank:
     def test_mass_concentrates_at_seeds_and_zero_unreachable(self, spark):
@@ -157,6 +167,27 @@ class TestPersonalizedPagerank:
             ).collect()
         }
         assert a == b
+
+    def test_reliable_checkpoint_mode_identical(self, spark, reliable_cuts):
+        from hg_data_pipelines_spark.operators.graph import (
+            personalized_pagerank_fixed_point,
+        )
+
+        edges = spark.createDataFrame(
+            [(i, (i * 3 + 1) % 29) for i in range(29)], ["src", "dst"]
+        )
+        seeds = spark.createDataFrame([(0,), (5,)], ["node"])
+
+        def run():
+            return {
+                r["node"]: r["rank_scaled"]
+                for r in personalized_pagerank_fixed_point(edges, seeds).collect()
+            }
+
+        local = run()
+        ckpt = reliable_cuts()
+        assert run() == local
+        assert list(ckpt.glob("*/rdd-*"))
 
 
 class TestKcorePeel:

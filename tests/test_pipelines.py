@@ -142,6 +142,20 @@ class TestDetectedObjects:
         assert good["polygon"].startswith("POLYGON ((500 800, 537.5 800, ")
         assert good["polygon"].endswith("500 800))")
 
+    def test_all_null_polygons_are_empty_wkt(self, spark, tmp_path):
+        # every polygon absent: the WKT UDF's Arrow batches are all-null
+        # array<array<array<double>>> lists
+        objs = [
+            {"bbox": [1.0, 2.0, 3.0, 4.0], "polygon": None, "score": 0.5,
+             "class": 1},
+            {"bbox": [5.0, 6.0, 7.0, 8.0], "polygon": None, "score": 0.6,
+             "class": 2},
+        ]
+        path = tmp_path / "results.json"
+        path.write_text(json.dumps([{"file_name": "p.jpg", "objects": objs}]))
+        rows = build_detected_objects(spark, str(path), with_uuid=False).collect()
+        assert [r["polygon"] for r in rows] == ["POLYGON EMPTY"] * 2
+
     def test_class_counts_report(self, spark, fixtures):
         df = build_detected_objects(spark, fixtures["results"], with_uuid=False)
         counts = class_counts(df).collect()

@@ -91,6 +91,21 @@ class TestResultsBuilder:
         without_mask = objs[1]
         assert without_mask["polygon"] is None
 
+    def test_all_masks_null_every_polygon_none(self, spark, tmp_path):
+        # every projected batch carries only null polygons: the typed
+        # GeoJSON struct must cross pandas -> Arrow all-None
+        payload = {
+            "bboxes": [[100.0, 200.0, 400.0, 600.0], [500.0, 100.0, 800.0, 300.0]],
+            "labels": [1, 3],
+            "scores": [0.91, 0.72],
+            "masks": [None, None],
+        }
+        (tmp_path / "0_pano_0000.json").write_text(json.dumps(payload))
+        preds = read_predictions_json(spark, str(tmp_path / "*.json"))
+        (row,) = build_results(preds).collect()
+        assert [o["polygon"] for o in row["objects"]] == [None, None]
+        assert [o["score"] for o in row["objects"]] == [0.91, 0.72]
+
     def test_feeds_downstream_pipeline(self, spark, predictions_dir, tmp_path):
         """The builder's output IS the street-level input: write it as
         results.json, run the grouping stage on it."""
