@@ -12,7 +12,11 @@ and the same code scales from sf0.001 to 100 TB.
 from __future__ import annotations
 
 import functools
+import glob
+import hashlib
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -79,6 +83,25 @@ def _with_scan_parallelism(
     return df
 
 
+def _data_files(path: str) -> list[tuple[str, int, int]]:
+    """(relative name, size, mtime_ns) of every data file under ``path``
+    (a file or a directory), skipping ``_``/``.`` metadata files."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return [("", st.st_size, st.st_mtime_ns)]
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(root, f)
+                try:
+                    st = os.stat(full)
+                except OSError:
+                    continue
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return sorted(out)
+
+
 def dir_scan_parallelism(
     spark: SparkSession, df: DataFrame, path: str
 ) -> DataFrame:
@@ -91,25 +114,106 @@ def dir_scan_parallelism(
     spilling for minutes while 31 cores idle. Size-gated like the scan
     helper, so it is a no-op both at trivial fixture sizes and at real
     scale (thousands of natural splits)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
+    total = sum(size for _, size, _ in _data_files(path))
     par = spark.sparkContext.defaultParallelism
     if par > 1 and _SCAN_PAR_MIN_BYTES <= total <= _SCAN_PAR_MAX_BYTES:
         return df.repartition(par)
     return df
 
 
-def _check_schema(df: DataFrame, expected: T.StructType, source: str) -> None:
-    """Names must match exactly and in order; types must be compatible.
+# Settings that change what Parquet schema inference returns; each is part
+# of a cached schema's key, as is the ``mergeSchema`` read option.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
 
-    Parquet's physical types are authoritative for width (int32 vs int64);
-    drift in *names* or type *family* is an error.
+# Inferred schemas, least recently used first: one entry per (paths,
+# settings), holding a digest of the files the schema was inferred from.
+# A rewritten table replaces its entry instead of adding one, and the
+# entry count is bounded here, whatever the data.
+_SCHEMA_CACHE_ENTRIES = 64
+_schema_cache: OrderedDict[tuple, tuple[str, T.StructType]] = OrderedDict()
+_schema_cache_lock = threading.Lock()
+
+
+def read_parquet(
+    spark: SparkSession,
+    *paths: str,
+    merge_schema: bool | None = None,
+    schema: T.StructType | None = None,
+) -> DataFrame:
+    """The package's one batch Parquet read: ``spark.read.parquet(*paths)``
+    without the Spark job that schema inference runs on every open.
+
+    With ``schema`` (the data columns of a table this process just wrote)
+    the read uses it as given; partition columns are still discovered
+    from the directory names, on the driver. Otherwise the schema Spark
+    infers is cached per process, keyed by the paths (globs expanded),
+    each data file's (name, size, mtime) and the settings that change
+    inference, so a rewritten table or a changed setting infers again.
+    A hit lists the files but runs no job. A path with no data file on
+    the local file system (another file system, a missing path) always
+    infers.
+    """
+    reader = spark.read
+    if merge_schema is not None:
+        reader = reader.option("mergeSchema", str(merge_schema).lower())
+    fingerprint = None
+    if schema is None:
+        fingerprint = _fingerprint(spark, paths, merge_schema)
+        schema = _cached_schema(fingerprint)
+    if schema is not None:
+        return reader.schema(schema).parquet(*paths)
+    df = reader.parquet(*paths)  # inference: one Spark job
+    if fingerprint is not None:
+        inferred = df.schema
+        with _schema_cache_lock:
+            _schema_cache[fingerprint[0]] = (fingerprint[1], inferred)
+            _schema_cache.move_to_end(fingerprint[0])
+            while len(_schema_cache) > _SCHEMA_CACHE_ENTRIES:
+                _schema_cache.popitem(last=False)
+    return df
+
+
+def _fingerprint(spark: SparkSession, paths, merge_schema) -> tuple | None:
+    """(cache key, digest of the listed data files), or ``None`` when some
+    path lists no data file here: a missing path, which Spark then
+    reports, or one on another file system."""
+    listed = []
+    for p in paths:
+        matches = sorted(glob.glob(p)) if glob.has_magic(p) else [p]
+        files = [(m, _data_files(m)) for m in matches]
+        if not any(f for _, f in files):
+            return None
+        listed += files
+    settings = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    digest = hashlib.sha1(repr(listed).encode()).hexdigest()
+    return (paths, merge_schema, settings), digest
+
+
+def _cached_schema(fingerprint: tuple | None) -> T.StructType | None:
+    if fingerprint is None:
+        return None
+    key, digest = fingerprint
+    with _schema_cache_lock:
+        hit = _schema_cache.get(key)
+        if hit is None or hit[0] != digest:
+            return None
+        _schema_cache.move_to_end(key)
+        return hit[1]
+
+
+def _check_schema(df: DataFrame, expected: T.StructType, source: str) -> None:
+    """Column names must match ``expected`` exactly and in order.
+
+    Types are not compared: Parquet's physical types are authoritative
+    for width (int32 vs int64) and for encodings such as ``events.ts``
+    (see ``load_table``).
     """
     got = df.schema
     if [f.name for f in got.fields] != [f.name for f in expected.fields]:
@@ -146,7 +250,7 @@ def load_table(
         # timestamp_micros() yields LTZ; the cast to NTZ goes through the
         # session TZ, so pin UTC for a host-independent result.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             ts = F.expr("timestamp_micros(ts DIV 1000)").cast("timestamp_ntz")
         else:
@@ -155,7 +259,7 @@ def load_table(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
     else:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     _check_schema(df, expected, path)
     if scan_parallel:
         df = _with_scan_parallelism(spark, df, path, mode=scan_parallel)
@@ -308,9 +412,8 @@ def read_warehouse_table(
     rewrite of historical partitions when a fact gains a column; pair
     with explicit column defaults downstream when NULL isn't the right
     backfill."""
-    return (
-        spark.read.option("mergeSchema", str(merge_schema).lower())
-        .parquet(os.path.join(warehouse_dir, table))
+    return read_parquet(
+        spark, os.path.join(warehouse_dir, table), merge_schema=merge_schema
     )
 
 
@@ -442,7 +545,7 @@ def merge_warehouse_table(
     if not os.path.isdir(path):
         return write_warehouse_table(df, warehouse_dir, table, partition_by)
 
-    existing = spark.read.option("mergeSchema", "true").parquet(path)
+    existing = read_parquet(spark, path, merge_schema=True)
     incoming = df.withColumn("_src", F.lit(1))
     if partition_by:
         base = _merge_base(spark, existing, df, partition_by)
@@ -564,7 +667,7 @@ def delete_from_warehouse_table(
     from pyspark.sql import functions as F
 
     path = os.path.join(warehouse_dir, table)
-    existing = spark.read.option("mergeSchema", "true").parquet(path)
+    existing = read_parquet(spark, path, merge_schema=True)
     kdf = F.broadcast(keys_df.select(*keys).distinct())
     if not partition_by:
         remaining = cut_lineage(existing.join(kdf, keys, "left_anti"), eager=True)
@@ -698,7 +801,7 @@ def compact_table(
                 total += os.path.getsize(os.path.join(root, f))
     n_files = max(1, math.ceil(total / target_file_bytes))
 
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     # Detect Hive-style partition columns from directory names so the
     # rewrite keeps the same pruning layout.
     part_cols = []

@@ -29,8 +29,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .io import write_warehouse_table
+from .io import read_parquet, write_warehouse_table
 
 
 @dataclass
@@ -86,7 +87,11 @@ class Pipeline:
                 )
                 # Re-read the landed table: downstream stages scan Parquet
                 # (pruning/pushdown apply) instead of recomputing the plan.
-                landed = spark.read.parquet(path)
+                # The write fixed its data columns, so nothing is inferred;
+                # partition columns come last, from the directory names.
+                parts = set(stage.partition_by or ())
+                written = T.StructType([f for f in df.schema if f.name not in parts])
+                landed = read_parquet(spark, path, schema=written)
                 if stage.parallel_reread:
                     from .io import dir_scan_parallelism
 

@@ -191,7 +191,11 @@ def best_lines_3d(
     pandas ``float(Series)`` scalar-add semantics intended there are applied
     per row here.
     """
-    nonempty = grouped.filter(F.col("polygon_json").isNotNull())
+    # One exchange by file_name serves both the (file_name, group_idx)
+    # window and the per-photo UDF below; broadcast joins keep it.
+    nonempty = grouped.filter(F.col("polygon_json").isNotNull()).repartition(
+        "file_name"
+    )
     # pandas idxmax = FIRST max in row order → tiebreak on obj_idx.
     w = Window.partitionBy("file_name", "group_idx").orderBy(
         F.desc("score"), F.asc("obj_idx")

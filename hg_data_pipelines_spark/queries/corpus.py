@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..io import read_parquet
 from ..session import cut_lineage
 from .common import load, query
 
@@ -2249,7 +2250,7 @@ def curation_funnel_chunks(spark, sf_dir):
             "force_exact": True,
         },
     )
-    chunks = spark.read.parquet(ctx.reports["corpus_chunks"]["path"])
+    chunks = read_parquet(spark, ctx.reports["corpus_chunks"]["path"])
     return chunks.select(
         "doc_id",
         F.col("split").cast("string").alias("split"),
@@ -2301,7 +2302,7 @@ def curation_funnel_chunks_production(spark, sf_dir):
             "semantic_method": "lsh",
         },
     )
-    chunks = spark.read.parquet(ctx.reports["corpus_chunks"]["path"])
+    chunks = read_parquet(spark, ctx.reports["corpus_chunks"]["path"])
     return chunks.select(
         "doc_id",
         F.col("split").cast("string").alias("split"),

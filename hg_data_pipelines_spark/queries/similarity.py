@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..io import read_parquet
 from ..operators.similarity import cosine_topk, lsh_topk
 from ..session import cut_lineage
 from .common import load, query
@@ -2834,7 +2835,7 @@ def graph_ann_warm_check(spark, sf_dir):
             k=_K, beam=_BEAM_WIDTH, rounds=_BEAM_ROUNDS, n_seeds=_BEAM_SEEDS,
         )
 
-    warm = walk(spark.read.parquet(f"{wh}/knn_edges")).select(
+    warm = walk(read_parquet(spark, f"{wh}/knn_edges")).select(
         "query_id", "neighbor_id",
         F.col("rank").cast("int").alias("rank"),
         F.col("cosine").alias("w_cos"),

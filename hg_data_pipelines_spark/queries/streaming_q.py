@@ -18,6 +18,7 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..io import read_parquet
 from ..session import cut_lineage
 from .common import query, sql_dsum, utc
 
@@ -30,7 +31,7 @@ def _raw_events_schema(spark, path):
     ``io.load_table``). Sniff the batch scan's resolved type so the stream
     schema matches the files on disk."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = spark.read.parquet(path).schema["ts"].dataType
+    ts_type = read_parquet(spark, path).schema["ts"].dataType
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -551,7 +552,7 @@ def streaming_left_outer_join(spark, sf_dir):
     # max over-requires when one side thins out near the tail (advisor
     # finding, round 10). Deriving wm_safe from the per-side min makes
     # the required-null set a guaranteed subset of what Spark must emit.
-    prev = spark.read.parquet(*batches[:-1])
+    prev = read_parquet(spark, *batches[:-1])
     side_mx = (
         prev.filter(F.col("event_type").isin("click", "purchase"))
         .groupBy("event_type")
@@ -704,7 +705,7 @@ def streaming_full_outer_join(spark, sf_dir):
     mx = ev.agg(F.max("ts")).collect()[0][0]
     wm = mx - datetime.timedelta(minutes=10)  # final global watermark
     batches = sorted(_glob.glob(stage + "/batch_*"))
-    prev = spark.read.parquet(*batches[:-1])
+    prev = read_parquet(spark, *batches[:-1])
     side_mx = (
         prev.filter(F.col("event_type").isin("click", "purchase"))
         .groupBy("event_type")
@@ -977,7 +978,7 @@ def streaming_warehouse_landing(spark, sf_dir):
     ck = tempfile.mkdtemp(prefix="s16_ck_")
     q = stream_to_warehouse(stream, wh, "events_landed", ck)
     q.awaitTermination()
-    landed = spark.read.parquet(os.path.join(wh, "events_landed", "*"))
+    landed = read_parquet(spark, os.path.join(wh, "events_landed", "*"))
     return landed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("event_id").cast("bigint").alias("n_distinct"),

@@ -17,6 +17,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from ..io import read_parquet
 from .common import dsum, load, query, sql_dsum, utc
 
 _SLICE_LO, _SLICE_HI = "2024-01-10", "2024-01-12"
@@ -59,7 +60,7 @@ def _events_fact_path(spark, sf_dir: str) -> str:
 )
 def partitioned_events_pruned(spark, sf_dir):
     utc(spark)
-    ev = spark.read.parquet(_events_fact_path(spark, sf_dir))
+    ev = read_parquet(spark, _events_fact_path(spark, sf_dir))
     pruned = ev.filter(
         F.col("event_date").between(F.lit(_SLICE_LO).cast("date"),
                                     F.lit(_SLICE_HI).cast("date"))
@@ -103,7 +104,7 @@ def dpp_weekend_dates(spark, sf_dir):
 def dpp_weekend_dates_plan(spark, sf_dir):
     """The join plan pre-cast, for the DPP plan assertion in tests."""
     utc(spark)
-    fact = spark.read.parquet(_events_fact_path(spark, sf_dir))
+    fact = read_parquet(spark, _events_fact_path(spark, sf_dir))
     raw = load(spark, sf_dir, "events")
     # Spark dayofweek: 1=Sun..7=Sat; DuckDB dayofweek: 0=Sun..6=Sat.
     wk = (
@@ -553,7 +554,7 @@ def warehouse_delete_keys(spark, sf_dir):
             partition_by=["event_date"],
         )
         _S19_CACHE[wh] = path
-    after = spark.read.parquet(_S19_CACHE[wh])
+    after = read_parquet(spark, _S19_CACHE[wh])
     return after.groupBy(
         F.col("event_date").cast("date").alias("event_date")
     ).agg(
@@ -607,7 +608,7 @@ def range_sorted_write(spark, sf_dir):
     # _rid: monotonically_increasing_id encodes read order within each
     # scan partition; the audit files are single-row-group (one split
     # each), so per-file _rid order IS on-disk row order.
-    back = spark.read.parquet(path).select(
+    back = read_parquet(spark, path).select(
         F.input_file_name().alias("f"), "ts",
         F.monotonically_increasing_id().alias("_rid"),
     )
@@ -815,7 +816,7 @@ def partition_evolution(spark, sf_dir):
     from ..io import write_warehouse_table
 
     utc(spark)
-    daily = spark.read.parquet(_events_fact_path(spark, sf_dir))
+    daily = read_parquet(spark, _events_fact_path(spark, sf_dir))
     evolved_dir = os.path.join(_warehouse_dir(sf_dir), "events_by_week")
     import shutil
 
@@ -827,7 +828,7 @@ def partition_evolution(spark, sf_dir):
         evolved, _warehouse_dir(sf_dir), "events_by_week",
         partition_by=["event_week"],
     )
-    back = spark.read.parquet(path).filter(F.col("event_week").isin(2, 3))
+    back = read_parquet(spark, path).filter(F.col("event_week").isin(2, 3))
     return back.groupBy(
         F.col("event_week").cast("int").alias("event_week"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"), dsum("value", "sum_value"))
@@ -891,7 +892,7 @@ def schema_evolution_read(spark, sf_dir):
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
         "o_orderpriority",
     ).write.mode("append").parquet(path)
-    back = spark.read.option("mergeSchema", "true").parquet(path)
+    back = read_parquet(spark, path, merge_schema=True)
     return back.groupBy(
         F.when(F.col("o_orderdate") < F.lit(_EVO_CUTOFF).cast("date"), 1)
         .otherwise(2)
@@ -1119,7 +1120,7 @@ def small_file_compaction(spark, sf_dir):
     before = n_files()
     compact_table(spark, path, target_file_bytes=1 << 30)
     after = n_files()
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         dsum("value", "sum_value"),

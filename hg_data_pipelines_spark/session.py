@@ -32,8 +32,9 @@ def get_spark(
     deployment that must survive executor loss passes
     ``extra_conf={"spark.checkpoint.dir": <fault-tolerant path>}`` (or
     calls ``SparkContext.setCheckpointDir``); every cut in the package
-    then becomes a reliable checkpoint in that directory. The setting is
-    read at session start: ``spark.conf.set`` cannot change it later.
+    then becomes a reliable checkpoint in that directory, deleted again
+    once the driver no longer references it. The setting is read at
+    session start: ``spark.conf.set`` cannot change it later.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -78,6 +79,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Reliable cuts (see ``cut_lineage``): delete a checkpoint's files
+        # once the driver no longer references it, so fixed-point
+        # iterates do not pile up in the checkpoint directory.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

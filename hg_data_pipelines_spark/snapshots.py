@@ -24,6 +24,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .io import read_parquet
+
 
 def _snap_dir(warehouse_dir: str, table: str) -> str:
     return os.path.join(warehouse_dir, table, "_snapshots")
@@ -92,7 +94,7 @@ def read_table_snapshot(
         )
     with open(os.path.join(_snap_dir(warehouse_dir, table), f"v{version}.json")) as fh:
         manifest = json.load(fh)
-    return spark.read.parquet(manifest["data_dir"])
+    return read_parquet(spark, manifest["data_dir"])
 
 
 def _live_data_dirs(warehouse_dir: str) -> set[str]:

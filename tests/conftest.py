@@ -35,6 +35,26 @@ def reliable_cuts(spark, tmp_path):
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
 
 
+@pytest.fixture(scope="session", autouse=True)
+def landed_schema_is_inferred_schema():
+    """``Pipeline.run`` re-reads each landed stage with the schema its write
+    produced, inferring nothing. For every pipeline any test runs, check
+    that schema against what Parquet inference returns for the same path."""
+    from hg_data_pipelines_spark import jobs
+
+    read = jobs.read_parquet
+
+    def checked(spark, *paths, **kw):
+        df = read(spark, *paths, **kw)
+        inferred = spark.read.parquet(*paths).schema
+        assert df.schema == inferred, (paths, df.schema, inferred)
+        return df
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(jobs, "read_parquet", checked)
+        yield
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

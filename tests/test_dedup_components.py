@@ -43,9 +43,9 @@ class TestConnectedComponents:
             (r["node"], r["comp"]) for r in connected_components(df).collect()
         }
         ckpt = reliable_cuts()
-        reliable = {
-            (r["node"], r["comp"]) for r in connected_components(df).collect()
-        }
+        # held: Spark deletes a reliable cut's files once it is unreferenced
+        out = connected_components(df)
+        reliable = {(r["node"], r["comp"]) for r in out.collect()}
         assert local == reliable
         # the reliable checkpoint actually wrote to the session's dir
         assert any(ckpt.iterdir())

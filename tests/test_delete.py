@@ -10,6 +10,7 @@ from hg_data_pipelines_spark.io import (
     delete_from_warehouse_table,
     write_warehouse_table,
 )
+from hg_data_pipelines_spark.session import cut_lineage
 
 
 def _rows(path):
@@ -60,10 +61,21 @@ class TestDeleteFromWarehouseTable:
         # d2 contains no deleted key -> its files were never rewritten
         assert _mtimes(untouched) == before
 
-    def test_reliable_cuts_delete(self, spark, tmp_path, reliable_cuts):
+    def test_reliable_cuts_delete(
+        self, spark, tmp_path, reliable_cuts, monkeypatch
+    ):
         # with a session checkpoint directory the pinned remainder is a
         # reliable checkpoint: the rewrite reads it, not the files it
         # replaces
+        from hg_data_pipelines_spark import io
+
+        held = []  # Spark deletes a reliable cut's files once unreferenced
+
+        def cut(df, eager=False):
+            held.append(cut_lineage(df, eager))
+            return held[-1]
+
+        monkeypatch.setattr(io, "cut_lineage", cut)
         wh, path = self._seed(spark, tmp_path)
         ckpt = reliable_cuts()
         keys = spark.createDataFrame([(2,)], "id long")

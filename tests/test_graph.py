@@ -56,10 +56,9 @@ class TestPagerankFixedPoint:
             for r in pagerank_fixed_point(df, n_iter=4).collect()
         }
         ckpt_dir = reliable_cuts()
-        ckpt = {
-            r["node"]: r["rank_scaled"]
-            for r in pagerank_fixed_point(df, n_iter=4).collect()
-        }
+        # held: Spark deletes a reliable cut's files once it is unreferenced
+        out = pagerank_fixed_point(df, n_iter=4)
+        ckpt = {r["node"]: r["rank_scaled"] for r in out.collect()}
         assert base == ckpt
         assert any(ckpt_dir.iterdir())
         assert list(ckpt_dir.glob("*/rdd-*"))
@@ -118,9 +117,15 @@ class TestShortestPathsBounded:
         edges = [(i, i + 1, i % 3 + 1) for i in range(1, 30)] + [
             (1, 15, 7), (15, 29, 4)
         ]
+        from hg_data_pipelines_spark.operators.graph import shortest_paths_bounded
+
         local = self._sp(spark, edges, source=1, rounds=6)
         ckpt = reliable_cuts()
-        reliable = self._sp(spark, edges, source=1, rounds=6)
+        # held: Spark deletes a reliable cut's files once it is unreferenced
+        out = shortest_paths_bounded(
+            spark.createDataFrame(edges, ["src", "dst", "w"]), 1, rounds=6
+        )
+        reliable = {r["node"]: r["dist_scaled"] for r in out.collect()}
         assert local == reliable
         assert list(ckpt.glob("*/rdd-*"))
 
@@ -178,15 +183,14 @@ class TestPersonalizedPagerank:
         )
         seeds = spark.createDataFrame([(0,), (5,)], ["node"])
 
-        def run():
-            return {
-                r["node"]: r["rank_scaled"]
-                for r in personalized_pagerank_fixed_point(edges, seeds).collect()
-            }
+        def run(out):
+            return {r["node"]: r["rank_scaled"] for r in out.collect()}
 
-        local = run()
+        local = run(personalized_pagerank_fixed_point(edges, seeds))
         ckpt = reliable_cuts()
-        assert run() == local
+        # held: Spark deletes a reliable cut's files once it is unreferenced
+        out = personalized_pagerank_fixed_point(edges, seeds)
+        assert run(out) == local
         assert list(ckpt.glob("*/rdd-*"))
 
 

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import ast
+import gc
 import pathlib
+import time
 
 import hg_data_pipelines_spark
 from hg_data_pipelines_spark.session import cut_lineage
@@ -54,3 +56,19 @@ def test_session_checkpoint_dir_chooses_storage(spark, reliable_cuts):
     # a reliable cut is written before any action, even when lazy was asked
     assert list(ckpt.glob("*/rdd-*"))
     assert sorted(local.collect()) == sorted(reliable.collect())
+
+
+def test_unreferenced_reliable_cuts_are_deleted(spark, reliable_cuts):
+    # get_spark sets spark.cleaner.referenceTracking.cleanCheckpoints:
+    # once the driver drops its last reference to a reliable cut and the
+    # JVM collects it, Spark deletes the cut's files.
+    ckpt = reliable_cuts()
+    cuts = [cut_lineage(spark.range(20).selectExpr(f"id * {i} AS v")) for i in range(5)]
+    assert len(list(ckpt.glob("*/rdd-*"))) == 5
+    del cuts
+    gc.collect()  # releases the py4j handles on the JVM Datasets
+    deadline = time.monotonic() + 30
+    while list(ckpt.glob("*/rdd-*")) and time.monotonic() < deadline:
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.2)
+    assert list(ckpt.glob("*/rdd-*")) == []

@@ -11,7 +11,12 @@ import numpy as np
 import pytest
 
 from hg_data_pipelines_spark.functions import geometry as G
-from hg_data_pipelines_spark.io import read_pose_csv, read_results_json
+from hg_data_pipelines_spark.io import (
+    read_parquet,
+    read_pose_csv,
+    read_results_json,
+    write_warehouse_table,
+)
 from hg_data_pipelines_spark.pipelines import (
     best_lines_3d,
     generate_projections,
@@ -212,6 +217,26 @@ class TestStreetLevelGrouping:
             (582100.0, 6002250.0, 97.3), W, H,
         )
         np.testing.assert_allclose(row["polygon_3d"][0], exp, rtol=1e-9)
+
+    def test_best_lines_3d_shuffles_once(self, spark, fixtures, tmp_path):
+        # one exchange by file_name serves both the best-row window and the
+        # per-photo ray UDF; the pose join is a broadcast. The input is the
+        # landed grouped table, as in the street_level_grouping pipeline.
+        raw = read_results_json(spark, fixtures["results"])
+        path = write_warehouse_table(
+            grouped_detected_objects(detected_with_idx(raw)), str(tmp_path), "g"
+        )
+        best = best_lines_3d(
+            read_parquet(spark, path), read_pose_csv(spark, fixtures["pose"])
+        )
+        plan = best._jdf.queryExecution().executedPlan().toString()
+        shuffles = [
+            line.strip()
+            for line in plan.splitlines()
+            if "Exchange" in line and "BroadcastExchange" not in line
+        ]
+        assert len(shuffles) == 1, plan
+        assert "hashpartitioning(file_name" in shuffles[0], plan
 
     def test_mesh_intersection_replaces_hits(self, spark, fixtures):
         raw = read_results_json(spark, fixtures["results"])
