@@ -213,7 +213,7 @@ def _check_schema(df: DataFrame, expected: T.StructType, source: str) -> None:
 
     Types are not compared: Parquet's physical types are authoritative
     for width (int32 vs int64) and for encodings such as ``events.ts``
-    (see ``load_table``).
+    (see ``events_ts_to_ntz``).
     """
     got = df.schema
     if [f.name for f in got.fields] != [f.name for f in expected.fields]:
@@ -221,6 +221,32 @@ def _check_schema(df: DataFrame, expected: T.StructType, source: str) -> None:
             f"{source}: column names {[f.name for f in got.fields]} != "
             f"expected {[f.name for f in expected.fields]}"
         )
+
+
+def events_ts_to_ntz(df: DataFrame) -> DataFrame:
+    """The raw ``events`` columns, with ``ts`` as microsecond TIMESTAMP_NTZ.
+
+    ``events.ts`` has shipped with two physical encodings across TESTDATA
+    generations: Parquet TIMESTAMP(NANOS), which has no Spark type and
+    reads as int64 nanoseconds (the session's ``nanosAsLong`` setting, see
+    ``session.get_spark``), and plain TIMESTAMP(MICROS). This branches on
+    the type the scan actually produces, so both yield the identical
+    column. Nanoseconds are floor-truncated to microseconds by integer
+    division, matching DuckDB; float division would lose precision, since
+    epoch nanoseconds (about 1.7e18) exceed double's 2^53 exact-integer
+    range. ``timestamp_micros`` yields LTZ, and its cast to NTZ goes
+    through the session's UTC time zone. Works on batch and streaming
+    frames alike.
+    """
+    from pyspark.sql import functions as F
+
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        ts = F.expr("timestamp_micros(ts DIV 1000)").cast("timestamp_ntz")
+    else:
+        ts = F.col("ts").cast("timestamp_ntz")
+    return df.withColumn("ts", ts).select(
+        "event_id", "ts", "user_id", "event_type", "value", "props"
+    )
 
 
 def load_table(
@@ -232,34 +258,16 @@ def load_table(
     Column pruning + predicate pushdown reach the parquet scan because this
     returns the lazy scan directly (no materialization).
 
-    ``events.ts`` has shipped with two physical encodings across TESTDATA
-    generations: parquet TIMESTAMP(NANOS) (no native Spark type — read as
-    int64 nanoseconds via ``spark.sql.legacy.parquet.nanosAsLong`` and
-    floor-truncated to microseconds with integer division, matching DuckDB's
-    truncation; float division would lose precision since epoch-nanos ≈
-    1.7e18 exceeds double's 2^53 exact-integer range) and plain
-    TIMESTAMP(MICROS). We branch on the type the scan actually produces, so
-    both generations yield the identical microsecond TIMESTAMP_NTZ column.
+    ``events`` reads either encoding of ``ts`` (int64 nanoseconds or
+    TIMESTAMP(MICROS)) as the same microsecond TIMESTAMP_NTZ column
+    (``events_ts_to_ntz``). It sets no session conf: the time zone and the
+    nanos policy are fixed at session start (``session.get_spark``).
     """
-    from pyspark.sql import functions as F
-
     expected = schemas.TESTDATA_TABLES[name]
     path = os.path.join(sf_dir, f"{name}.parquet")
+    df = read_parquet(spark, path)
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # timestamp_micros() yields LTZ; the cast to NTZ goes through the
-        # session TZ, so pin UTC for a host-independent result.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = read_parquet(spark, path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            ts = F.expr("timestamp_micros(ts DIV 1000)").cast("timestamp_ntz")
-        else:
-            ts = F.col("ts").cast("timestamp_ntz")
-        df = df.withColumn("ts", ts).select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        )
-    else:
-        df = read_parquet(spark, path)
+        df = events_ts_to_ntz(df)
     _check_schema(df, expected, path)
     if scan_parallel:
         df = _with_scan_parallelism(spark, df, path, mode=scan_parallel)
@@ -565,14 +573,10 @@ def merge_warehouse_table(
     )
     writer = merged.write.mode("overwrite")
     if partition_by:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            writer.partitionBy(*partition_by).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    else:
-        writer.parquet(path)
+        writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
+            *partition_by
+        )
+    writer.parquet(path)
     return path
 
 
@@ -704,14 +708,9 @@ def delete_from_warehouse_table(
     nonempty = {
         tuple(r) for r in remaining.select(*partition_by).distinct().collect()
     }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        remaining.write.mode("overwrite").partitionBy(*partition_by).parquet(
-            path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    remaining.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_by).parquet(path)
     # Fully-emptied partitions: dynamic overwrite leaves their directories
     # in place (no output rows land there), so remove them explicitly.
     # Directory names come from PARSING the on-disk Hive layout — naive

@@ -52,11 +52,6 @@ def load(spark: SparkSession, sf_dir: str, *names: str, scan_parallel: bool | st
     return dfs[0] if len(dfs) == 1 else dfs
 
 
-def utc(spark: SparkSession) -> None:
-    """Pin session TZ; timestamp-epoch arithmetic must be host-independent."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 def dsum(col: Column | str, alias: str) -> Column:
     """Order-independent double sum via exact DECIMAL(38,6) accumulation."""
     c = F.col(col) if isinstance(col, str) else col

@@ -531,9 +531,6 @@ def simhash_portable_pairs(spark, sf_dir):
 def dedup_time_bounded(spark, sf_dir):
     from pyspark.sql import Window
 
-    from .common import utc
-
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)

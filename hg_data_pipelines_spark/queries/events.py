@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
 from ..session import cut_lineage
-from .common import dsum, load, query, sql_dsum, utc
+from .common import dsum, load, query, sql_dsum
 
 
 def _epoch_us(col):
@@ -45,7 +45,6 @@ def _epoch_us(col):
     """,
 )
 def lag_lead_running_sum(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -82,7 +81,6 @@ def lag_lead_running_sum(spark, sf_dir):
     """,
 )
 def asof_latest_order(spark, sf_dir):
-    utc(spark)
     ev, orders = load(spark, sf_dir, "events", "orders")
     orders_d = orders.groupBy("o_custkey", "o_orderdate").agg(
         F.max("o_orderkey").alias("o_orderkey")
@@ -115,7 +113,6 @@ def asof_latest_order(spark, sf_dir):
     """,
 )
 def tumbling_window_agg(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -141,7 +138,6 @@ def tumbling_window_agg(spark, sf_dir):
     """,
 )
 def sliding_window_agg(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
@@ -194,7 +190,6 @@ _SESSIONIZE_SQL = """
     """,
 )
 def sessionization_lag(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -229,7 +224,6 @@ def sessionization_lag(spark, sf_dir):
     """,
 )
 def session_window_agg(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
@@ -273,7 +267,6 @@ def session_window_agg(spark, sf_dir):
     """,
 )
 def time_range_rolling(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -331,7 +324,6 @@ def time_range_rolling(spark, sf_dir):
     """,
 )
 def gap_fill_hourly(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     bounds = ev.groupBy("user_id").agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
@@ -377,7 +369,6 @@ def gap_fill_hourly(spark, sf_dir):
     """,
 )
 def json_extract(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     return (
         ev.select(
@@ -420,7 +411,6 @@ def json_extract(spark, sf_dir):
     """,
 )
 def interval_join_followups(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     anchors = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -473,7 +463,6 @@ def cohort_retention(spark, sf_dir):
     """Weekly retention triangle: users grouped by first-seen week, counted
     in each subsequent active week. Two aggregations plus one join on
     user_id; the firsts table is |users|-sized (broadcastable at scale)."""
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
@@ -521,7 +510,6 @@ def funnel_conversion(spark, sf_dir):
     operators/funnel.py for the per-stage shrinking-join design."""
     from ..operators.funnel import funnel_counts
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     return funnel_counts(ev, ["signup", "view", "click", "purchase"])
 
@@ -549,7 +537,6 @@ def funnel_conversion(spark, sf_dir):
     """,
 )
 def variant_extract(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     shredded = ev.select(
         "event_type",
@@ -583,7 +570,6 @@ def variant_extract(spark, sf_dir):
     """,
 )
 def rolling_median(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     ev.createOrReplaceTempView("_w7_events")
     return spark.sql(
@@ -619,7 +605,6 @@ def rolling_median(spark, sf_dir):
 def range_join_banded(spark, sf_dir):
     from ..operators.rangejoin import banded_range_join
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     anchors = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "ts"
@@ -671,7 +656,6 @@ def range_join_banded(spark, sf_dir):
     """,
 )
 def zscore_trailing(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     lagged = ev.select(
@@ -749,7 +733,6 @@ def zscore_trailing(spark, sf_dir):
 def session_funnel(spark, sf_dir):
     from ..operators.funnel import funnel_counts
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -803,7 +786,6 @@ def session_funnel(spark, sf_dir):
     """,
 )
 def asof_next_order(spark, sf_dir):
-    utc(spark)
     ev, orders = load(spark, sf_dir, "events", "orders")
     orders_d = orders.groupBy("o_custkey", "o_orderdate").agg(
         F.max("o_orderkey").alias("o_orderkey")
@@ -845,7 +827,6 @@ def asof_next_order(spark, sf_dir):
 def adaptive_skew_join_query(spark, sf_dir):
     from ..operators.scale import adaptive_salted_join
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     profile = ev.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
     joined = adaptive_salted_join(
@@ -956,7 +937,6 @@ def skew90_join_salted(spark, sf_dir):
     """,
 )
 def event_transition_matrix(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -1003,7 +983,6 @@ def event_transition_matrix(spark, sf_dir):
     """,
 )
 def rfm_segmentation(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     anchor = ev.agg(F.max("ts").alias("max_ts"))
     per_user = (
@@ -1071,7 +1050,6 @@ _EWMA_ALPHA = "0.3"
     """,
 )
 def ewma_per_user(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.collect_list(F.struct("ts", "event_id", "value")).alias("raw"),
@@ -1111,7 +1089,6 @@ def ewma_per_user(spark, sf_dir):
     """,
 )
 def running_distinct_types(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -1158,7 +1135,6 @@ def running_distinct_types(spark, sf_dir):
     """,
 )
 def attribution_last_touch(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -1374,7 +1350,6 @@ _OHLC_SQL = f"""
 
 @query("X6_ohlc_downsample", _OHLC_SQL)
 def ohlc_downsample(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
@@ -1480,7 +1455,6 @@ def correlation_exact(spark, sf_dir):
     """,
 )
 def asof_tolerance_band(spark, sf_dir):
-    utc(spark)
     ev, orders = load(spark, sf_dir, "events", "orders")
     orders_d = orders.groupBy("o_custkey", "o_orderdate").agg(
         F.max("o_orderkey").alias("o_orderkey")
@@ -1531,7 +1505,6 @@ def asof_tolerance_band(spark, sf_dir):
     """,
 )
 def dau_mau_stickiness(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     active = ev.select(
         "user_id", F.col("ts").cast("date").alias("day")
@@ -1610,7 +1583,6 @@ def dau_mau_stickiness(spark, sf_dir):
     """,
 )
 def top_session_paths(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1696,7 +1668,6 @@ def top_session_paths(spark, sf_dir):
     """,
 )
 def session_anomalies(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1772,7 +1743,6 @@ def session_anomalies(spark, sf_dir):
 def running_distinct_users(spark, sf_dir):
     from ..operators.scale import global_running_sum
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     first_day = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("day")
@@ -1831,7 +1801,6 @@ def running_distinct_users(spark, sf_dir):
     """,
 )
 def holt_linear_per_user(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.collect_list(F.struct("ts", "event_id", "value")).alias("raw"),
@@ -1894,7 +1863,6 @@ def holt_linear_per_user(spark, sf_dir):
 def asof_nearest_order(spark, sf_dir):
     from ..operators.asof import asof_join_nearest
 
-    utc(spark)
     ev, orders = load(spark, sf_dir, "events", "orders")
     orders_d = orders.groupBy("o_custkey", "o_orderdate").agg(
         F.max("o_orderkey").alias("o_orderkey")
@@ -1945,7 +1913,6 @@ def asof_nearest_order(spark, sf_dir):
     """,
 )
 def longest_streak_per_user(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     days = ev.select(
         "user_id", F.col("ts").cast("date").alias("day")
@@ -2027,7 +1994,6 @@ def longest_streak_per_user(spark, sf_dir):
 def attribution_models(spark, sf_dir):
     from pyspark.sql import Window
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     touches = ev.filter(F.col("event_type").isin("click", "view")).select(
         F.col("user_id").alias("t_user_id"),
@@ -2110,7 +2076,6 @@ def attribution_models(spark, sf_dir):
 def bounce_rate_by_entry(spark, sf_dir):
     from pyspark.sql import Window
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2287,7 +2252,6 @@ def rfm_segments(spark, sf_dir):
     """,
 )
 def event_transition_matrix(spark, sf_dir):
-    utc(spark)
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
@@ -2425,7 +2389,6 @@ def point_in_time_features(spark, sf_dir):
     """,
 )
 def temporal_anti_join(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts", "value"
@@ -2503,7 +2466,6 @@ def temporal_anti_join(spark, sf_dir):
     """,
 )
 def ab_cuped_adjustment(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
     cut = F.lit("2024-01-16").cast("timestamp")
@@ -2603,7 +2565,6 @@ def ab_cuped_adjustment(spark, sf_dir):
 def funnel_time_to_convert(spark, sf_dir):
     from ..operators.funnel import funnel_stage_times
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     stages = [
         # each stage table feeds TWO consumers (its own pair delta and the
@@ -2731,7 +2692,6 @@ def funnel_time_to_convert(spark, sf_dir):
     """,
 )
 def holt_winters_seasonal(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type",

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators.quality import Constraint, check_constraints, profile
 from ..session import cut_lineage
-from .common import load, query, utc
+from .common import load, query
 
 # --------------------------------------------------------------------------
 # DQ1: one-pass column profile of orders (exact-distinct form so DuckDB
@@ -402,7 +402,6 @@ _DQ8_Z = (
 def volume_drift(spark, sf_dir):
     from pyspark.sql import Window
 
-    utc(spark)
     events = load(spark, sf_dir, "events")
     daily = events.groupBy(
         F.col("ts").cast("date").alias("day")
@@ -467,7 +466,6 @@ def volume_drift(spark, sf_dir):
     """,
 )
 def freshness_audit(spark, sf_dir):
-    utc(spark)
     asof = "DATE '2024-02-01'"
     parts = []
     for feed, table, col in [
@@ -588,7 +586,6 @@ def _dq10_bucket_sql(val: str, pfx: str) -> str:
     """,
 )
 def psi_value_drift(spark, sf_dir):
-    utc(spark)
     ev_raw = load(spark, sf_dir, "events")
     days = (
         ev_raw.select(F.col("ts").cast("date").alias("day"))
@@ -734,7 +731,6 @@ def psi_value_drift(spark, sf_dir):
 def cusum_changepoint(spark, sf_dir):
     from pyspark.sql import Window
 
-    utc(spark)
     events = load(spark, sf_dir, "events")
     daily = events.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).alias("n")
@@ -812,7 +808,6 @@ def cusum_changepoint(spark, sf_dir):
     """,
 )
 def seasonal_volume_anomaly(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.to_date("ts").alias("day"), "event_type"

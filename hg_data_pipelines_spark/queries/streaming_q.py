@@ -5,10 +5,19 @@
 output mode, so its final state equals the batch aggregation — which is the
 DuckDB oracle. Watermark/append-mode semantics (X7/X9) have no batch oracle
 and live in ``hg_data_pipelines_spark.streaming`` with pytest goldens.
+
+Every query here that streams ``events`` gets its source from
+``_event_stream``: a keyed stage directory (recreated on reuse, never
+left behind) and ``ts`` normalized by ``io.events_ts_to_ntz``, whichever
+Parquet encoding ``events.ts`` has. The queries set no session conf:
+the time zone and the nanos policy are fixed at session start
+(``session.get_spark``). The one override is ``_stream_state_partitions``,
+whose state-partition count has no per-query form.
 """
 
 from __future__ import annotations
 
+import hashlib
 import itertools
 import os
 import shutil
@@ -16,42 +25,57 @@ import tempfile
 import time
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..io import read_parquet
+from ..io import events_ts_to_ntz, read_parquet
 from ..session import cut_lineage
-from .common import query, sql_dsum, utc
+from .common import query, sql_dsum
 
 _COUNTER = itertools.count()
 
-
-def _raw_events_schema(spark, path):
-    """Physical schema of events.parquet — ``ts`` has shipped as both INT64
-    nanoseconds and TIMESTAMP(MICROS) across TESTDATA generations (see
-    ``io.load_table``). Sniff the batch scan's resolved type so the stream
-    schema matches the files on disk."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = read_parquet(spark, path).schema["ts"].dataType
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+# Schema of the batches ``_stage_event_batches`` writes from
+# ``io.load_table``'s ``events``: ``ts`` is already microsecond NTZ.
+_STAGED_EVENTS = (
+    "event_id long, ts timestamp_ntz, user_id long,"
+    " event_type string, value double, props string"
+)
 
 
-def _to_ntz(df):
-    """Normalize the raw ``ts`` column (int64-nanos or timestamp) to
-    microsecond TIMESTAMP_NTZ, mirroring ``io.load_table``."""
-    if isinstance(df.schema["ts"].dataType, T.LongType):
-        ts = F.expr("timestamp_micros(ts DIV 1000)").cast("timestamp_ntz")
+def _keyed_dir(prefix: str, key: str) -> str:
+    """An empty directory ``<tempdir>/<prefix><pid>_<hash of key>``,
+    recreated on reuse, so a repeated build replaces its directory
+    instead of leaving another one behind."""
+    digest = hashlib.md5(key.encode()).hexdigest()[:12]
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}{os.getpid()}_{digest}")
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    return path
+
+
+def _event_stream(spark, sf_dir: str, prefix: str | None = None):
+    """``(stream, stage)``: ``events`` as a file stream source, with ``ts``
+    normalized by ``io.events_ts_to_ntz``, and the directory it streams
+    from (file stream sources need a directory; testdata is read-only).
+
+    With ``prefix`` the stage is a keyed copy of ``events.parquet``,
+    streamed with the file's own schema, so either ``ts`` encoding
+    streams (the schema comes from ``read_parquet``'s cache). Without,
+    the stage is ``_stage_event_batches``' time-ordered replay, one
+    file per trigger.
+    """
+    if prefix is None:
+        stage = _stage_event_batches(spark, sf_dir)
+        raw = (
+            spark.readStream.schema(_STAGED_EVENTS)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage + "/batch_*")
+        )
     else:
-        ts = F.col("ts").cast("timestamp_ntz")
-    return df.withColumn("ts", ts)
+        src = os.path.join(sf_dir, "events.parquet")
+        stage = _keyed_dir(prefix, os.path.abspath(src))
+        shutil.copy(src, stage)
+        raw = spark.readStream.schema(read_parquet(spark, src).schema).parquet(stage)
+    return events_ts_to_ntz(raw), stage
 
 
 @query(
@@ -63,14 +87,7 @@ def _to_ntz(df):
     """,
 )
 def streaming_tumbling(spark, sf_dir):
-    utc(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # The file stream source requires a *directory*; stage the single
-    # parquet file into a temp dir (testdata is read-only).
-    stage = tempfile.mkdtemp(prefix="x6_events_")
-    shutil.copy(os.path.join(sf_dir, "events.parquet"), stage)
-    schema = _raw_events_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    stream = _to_ntz(spark.readStream.schema(schema).parquet(stage))
+    stream, stage = _event_stream(spark, sf_dir, "x6_events_")
     agg = (
         stream.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
@@ -109,12 +126,7 @@ def streaming_sliding(spark, sf_dir):
     ``X6_streaming_tumbling`` it pins Spark's window-alignment semantics
     (epoch-aligned starts, half-open [start, start+size)) cross-engine
     for the overlapping case too."""
-    utc(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="x6_events_slide_")
-    shutil.copy(os.path.join(sf_dir, "events.parquet"), stage)
-    schema = _raw_events_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    stream = _to_ntz(spark.readStream.schema(schema).parquet(stage))
+    stream, stage = _event_stream(spark, sf_dir, "x6_events_slide_")
     agg = (
         stream.groupBy(
             F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
@@ -150,17 +162,11 @@ def _stage_event_batches(spark, sf_dir: str, n_batches: int = 3) -> str:
     between runs. The staging dir is keyed by (sf_dir, n_batches) and
     recreated on reuse, so repeated invocations don't leak temp dirs.
     """
-    import hashlib
-
     from pyspark.sql import Window
 
     from ..io import load_table
 
-    key = hashlib.md5(f"{os.path.abspath(sf_dir)}|{n_batches}".encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"xstream_{os.getpid()}_{key}")
-    if os.path.isdir(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
+    stage = _keyed_dir("xstream_", f"{os.path.abspath(sf_dir)}|{n_batches}")
 
     ev = load_table(spark, sf_dir, "events")
     n_rows = ev.count()
@@ -316,16 +322,7 @@ def streaming_watermarked_window(spark, sf_dir):
     from ..io import load_table
     from ..streaming import watermarked_tumbling_agg
 
-    utc(spark)
-    stage = _stage_event_batches(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp_ntz, user_id long,"
-            " event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage + "/batch_*")
-    )
+    stream, stage = _event_stream(spark, sf_dir)
     agg = watermarked_tumbling_agg(
         stream.withColumn("ts", F.col("ts").cast("timestamp")),
         window="5 minutes",
@@ -405,16 +402,11 @@ def streaming_stream_join(spark, sf_dir):
     """
     from ..streaming import stream_stream_join
 
-    utc(spark)
     stage = _stage_event_batches(spark, sf_dir)
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long,"
-        " event_type string, value double, props string"
-    )
 
     def _side(event_type):
         return (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(_STAGED_EVENTS)
             .option("maxFilesPerTrigger", 1)
             .parquet(stage + "/batch_*")
             .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -479,16 +471,11 @@ def streaming_left_outer_join(spark, sf_dir):
     from ..io import load_table
     from ..streaming import stream_stream_join
 
-    utc(spark)
     stage = _stage_event_batches(spark, sf_dir)
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long,"
-        " event_type string, value double, props string"
-    )
 
     def _side(event_type):
         return (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(_STAGED_EVENTS)
             .option("maxFilesPerTrigger", 1)
             .parquet(stage + "/batch_*")
             .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -637,16 +624,11 @@ def streaming_full_outer_join(spark, sf_dir):
     from ..io import load_table
     from ..streaming import stream_stream_join
 
-    utc(spark)
     stage = _stage_event_batches(spark, sf_dir)
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long,"
-        " event_type string, value double, props string"
-    )
 
     def _side(event_type):
         return (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(_STAGED_EVENTS)
             .option("maxFilesPerTrigger", 1)
             .parquet(stage + "/batch_*")
             .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -780,16 +762,7 @@ def streaming_dedup(spark, sf_dir):
     from ..io import load_table
     from ..streaming import stream_dedup_within_watermark
 
-    utc(spark)
-    stage = _stage_event_batches(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp_ntz, user_id long,"
-            " event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage + "/batch_*")
-    )
+    stream, stage = _event_stream(spark, sf_dir)
     doubled = (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
         .withColumn("_copy", F.explode(F.array(F.lit(0), F.lit(1))))
@@ -868,12 +841,7 @@ _X8_SESSION_SQL = """
 
 @query("X17_streaming_session_window", _X8_SESSION_SQL)
 def streaming_session_window(spark, sf_dir):
-    utc(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="x17_events_")
-    shutil.copy(os.path.join(sf_dir, "events.parquet"), stage)
-    schema = _raw_events_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    stream = _to_ntz(spark.readStream.schema(schema).parquet(stage))
+    stream, stage = _event_stream(spark, sf_dir, "x17_events_")
     agg = (
         stream.groupBy(
             F.session_window("ts", "30 minutes").alias("sw"), "user_id"
@@ -913,12 +881,7 @@ def streaming_session_window(spark, sf_dir):
     """,
 )
 def streaming_ohlc(spark, sf_dir):
-    utc(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="x6_ohlc_events_")
-    shutil.copy(os.path.join(sf_dir, "events.parquet"), stage)
-    schema = _raw_events_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    stream = _to_ntz(spark.readStream.schema(schema).parquet(stage))
+    stream, stage = _event_stream(spark, sf_dir, "x6_ohlc_events_")
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -965,17 +928,10 @@ def streaming_ohlc(spark, sf_dir):
 def streaming_warehouse_landing(spark, sf_dir):
     from ..streaming import stream_to_warehouse
 
-    utc(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = _stage_event_batches(spark, sf_dir)
-    schema = _raw_events_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    stream = _to_ntz(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage + "/batch_*")
-    )
-    wh = tempfile.mkdtemp(prefix="s16_wh_")
-    ck = tempfile.mkdtemp(prefix="s16_ck_")
+    stream, _ = _event_stream(spark, sf_dir)
+    # keyed, not removed: the returned frame reads ``wh`` lazily
+    key = os.path.abspath(sf_dir)
+    wh, ck = _keyed_dir("s16_wh_", key), _keyed_dir("s16_ck_", key)
     q = stream_to_warehouse(stream, wh, "events_landed", ck)
     q.awaitTermination()
     landed = read_parquet(spark, os.path.join(wh, "events_landed", "*"))
@@ -1013,14 +969,9 @@ def streaming_warehouse_landing(spark, sf_dir):
     """,
 )
 def streaming_static_enrich(spark, sf_dir):
-    utc(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from ..io import load_table
 
-    stage = tempfile.mkdtemp(prefix="x10_static_events_")
-    shutil.copy(os.path.join(sf_dir, "events.parquet"), stage)
-    schema = _raw_events_schema(spark, os.path.join(sf_dir, "events.parquet"))
-    stream = _to_ntz(spark.readStream.schema(schema).parquet(stage))
+    stream, stage = _event_stream(spark, sf_dir, "x10_static_events_")
 
     dim = (
         load_table(spark, sf_dir, "customer")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .common import load, query, sql_davg, sql_dsum, utc
+from .common import load, query, sql_davg, sql_dsum
 
 _Q6 = Decimal("0.000001")
 
@@ -142,7 +142,6 @@ def _user_stats(pdf: pd.DataFrame) -> pd.DataFrame:
     """,
 )
 def grouped_map_user_stats(spark, sf_dir):
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy("user_id").applyInPandas(_user_stats, _USER_STATS_SCHEMA)
 
@@ -266,7 +265,6 @@ def _reconcile(key, orders_pdf: pd.DataFrame, events_pdf: pd.DataFrame) -> pd.Da
     """,
 )
 def cogrouped_reconciliation(spark, sf_dir):
-    utc(spark)
     orders, events = load(spark, sf_dir, "orders", "events")
     out_schema = T.StructType(
         [

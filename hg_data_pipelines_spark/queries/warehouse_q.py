@@ -18,7 +18,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from ..io import read_parquet
-from .common import dsum, load, query, sql_dsum, utc
+from .common import dsum, load, query, sql_dsum
 
 _SLICE_LO, _SLICE_HI = "2024-01-10", "2024-01-12"
 
@@ -59,7 +59,6 @@ def _events_fact_path(spark, sf_dir: str) -> str:
     """,
 )
 def partitioned_events_pruned(spark, sf_dir):
-    utc(spark)
     ev = read_parquet(spark, _events_fact_path(spark, sf_dir))
     pruned = ev.filter(
         F.col("event_date").between(F.lit(_SLICE_LO).cast("date"),
@@ -103,7 +102,6 @@ def dpp_weekend_dates(spark, sf_dir):
 
 def dpp_weekend_dates_plan(spark, sf_dir):
     """The join plan pre-cast, for the DPP plan assertion in tests."""
-    utc(spark)
     fact = read_parquet(spark, _events_fact_path(spark, sf_dir))
     raw = load(spark, sf_dir, "events")
     # Spark dayofweek: 1=Sun..7=Sat; DuckDB dayofweek: 0=Sun..6=Sat.
@@ -138,7 +136,6 @@ def dpp_weekend_dates_plan(spark, sf_dir):
 def orc_roundtrip_pricing(spark, sf_dir):
     from ..io import read_orc, write_orc
 
-    utc(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_extendedprice", "l_discount",
         "l_shipdate",
@@ -297,7 +294,6 @@ def cdc_apply_roundtrip(spark, sf_dir):
         write_table_snapshot,
     )
 
-    utc(spark)
     orders = load(spark, sf_dir, "orders")
 
     def agg(df):
@@ -371,7 +367,6 @@ def cdc_apply_roundtrip(spark, sf_dir):
 def snapshot_diff_query(spark, sf_dir):
     from ..snapshots import snapshot_diff, write_table_snapshot
 
-    utc(spark)
     orders = load(spark, sf_dir, "orders")
 
     def agg(df):
@@ -434,7 +429,6 @@ def _zorder_sql(bits: int = 16) -> str:
 def zorder_key_events(spark, sf_dir):
     from ..operators.layout import with_zorder_key
 
-    utc(spark)
     events = load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -495,7 +489,6 @@ def _hilbert_sql(bits: int = 16) -> str:
 def hilbert_key_events(spark, sf_dir):
     from ..operators.layout import with_hilbert_key
 
-    utc(spark)
     events = load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -538,7 +531,6 @@ _S19_CACHE: dict[str, str] = {}
 def warehouse_delete_keys(spark, sf_dir):
     from ..io import delete_from_warehouse_table, write_warehouse_table
 
-    utc(spark)
     wh = _warehouse_dir(sf_dir)
     cached = _S19_CACHE.get(wh)
     if cached is None or not os.path.isdir(cached):
@@ -592,7 +584,6 @@ _S20_CACHE: dict[str, str] = {}
 def range_sorted_write(spark, sf_dir):
     from pyspark.sql import Window
 
-    utc(spark)
     wh = _warehouse_dir(sf_dir)
     path = _S20_CACHE.get(wh)
     if path is None or not os.path.isdir(path):
@@ -759,7 +750,6 @@ def bucketed_colocated_join(spark, sf_dir):
     """,
 )
 def incremental_join_maintenance(spark, sf_dir):
-    utc(spark)
     orders, cust = load(spark, sf_dir, "orders", "customer")
     cut = F.lit("1997-01-01").cast("timestamp")
     a_old = orders.filter(F.col("o_orderdate") < cut)
@@ -815,7 +805,6 @@ def incremental_join_maintenance(spark, sf_dir):
 def partition_evolution(spark, sf_dir):
     from ..io import write_warehouse_table
 
-    utc(spark)
     daily = read_parquet(spark, _events_fact_path(spark, sf_dir))
     evolved_dir = os.path.join(_warehouse_dir(sf_dir), "events_by_week")
     import shutil
@@ -1108,7 +1097,6 @@ def small_file_compaction(spark, sf_dir):
 
     from ..io import compact_table
 
-    utc(spark)
     ev = load(spark, sf_dir, "events")
     path = os.path.join(_warehouse_dir(sf_dir), "events_fragmented")
     shutil.rmtree(path, ignore_errors=True)

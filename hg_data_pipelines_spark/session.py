@@ -35,6 +35,17 @@ def get_spark(
     then becomes a reliable checkpoint in that directory, deleted again
     once the driver no longer references it. The setting is read at
     session start: ``spark.conf.set`` cannot change it later.
+
+    Two SQL settings are session properties, fixed here and set by no
+    query or operator:
+
+    - ``spark.sql.session.timeZone=UTC``: timestamp arithmetic and the
+      LTZ -> NTZ casts of ``events.ts`` give the same result on any host.
+    - ``spark.sql.legacy.parquet.nanosAsLong=true``: a Parquet
+      ``TIMESTAMP(NANOS)`` column (one of ``events.ts``'s two encodings,
+      see ``io.events_ts_to_ntz``) reads as int64 nanoseconds instead of
+      failing. The setting acts only at schema inference, and
+      ``io.read_parquet``'s schema cache keys on it.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -74,6 +85,8 @@ def get_spark(
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         # Deterministic timestamp semantics regardless of host TZ.
         .config("spark.sql.session.timeZone", "UTC")
+        # Parquet TIMESTAMP(NANOS) reads as int64 nanoseconds.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Broadcast threshold: dims (region/nation/customer/class_dim) are
         # broadcast; AQE may upgrade more joins at runtime.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -8,6 +8,9 @@ scale anti-patterns.
   execution; every Python boundary must be Arrow-batched
   (ArrowEvalPython / ArrowEvalPythonUDTF / mapInPandas / applyInPandas).
 
+Building a query also leaves ``spark.conf.getAll`` unchanged: session
+settings are fixed at session start (``session.get_spark``).
+
 Streaming queries are skipped: calling them executes a stream and their
 final DataFrame is a memory-sink table scan, so there is no batch plan
 to audit (their transformations are audited via the batch twins).
@@ -84,7 +87,10 @@ def _unpartitioned_window_lines(plan: str) -> list[str]:
 
 @pytest.mark.parametrize("name", _AUDITED)
 def test_plan_has_no_scale_antipatterns(spark, name):
+    conf = spark.conf.getAll
     df = QUERIES[name](spark, SF)
+    # session settings are fixed at session start; no build changes them
+    assert spark.conf.getAll == conf, f"{name}: the build changed session conf"
     plan = df._jdf.queryExecution().executedPlan().toString()
     hits = [p for p in _FORBIDDEN if p in plan]
     assert not hits, f"{name}: forbidden plan nodes {hits}"

@@ -8,6 +8,9 @@ side — the pay-the-shuffle-once contract for 100 TB fact⋈fact joins.
 from __future__ import annotations
 
 import io
+import math
+import struct
+import sys
 from contextlib import redirect_stdout
 
 import pytest
@@ -1076,6 +1079,73 @@ class TestExactQuantilesTwopass:
         # result is a local relation of the picked values; only the
         # target-bucket slice ever reaches the pick's window
         assert "Exchange rangepartitioning" not in plan
+
+
+class TestExtremeDoubles:
+    """The log-bucket ladder (``_LOG_BUCKET_OFFSET``) claims to clear every
+    finite double: ±max, subnormals down to 5e-324, the smallest normal
+    and a single-value group select exactly, through both the histogram
+    edges and the in-bucket pick (three neighbours share one bucket)."""
+
+    _MAX = sys.float_info.max
+    _NORMAL = sys.float_info.min
+    _SUB = 5e-324
+    _QS = [0.05, 0.1, 0.25, 0.37, 0.5, 0.75, 0.9, 0.99, 1.0]
+
+    def _groups(self):
+        top = [self._MAX, math.nextafter(self._MAX, 0)]
+        top.append(math.nextafter(top[-1], 0))
+        sub = [self._SUB * k for k in (1, 2, 3, 7, 1000, 2**20, 2**20 + 1, 2**20 + 2)]
+        return {
+            "extremes": top + [-v for v in top] + [
+                -self._NORMAL, self._NORMAL, -self._SUB, self._SUB, 0.0, -1.0, 1.0,
+            ],
+            "subnormal": sub + [-self._SUB, -2 * self._SUB] + [
+                math.nextafter(self._NORMAL, 0), self._NORMAL,
+                math.nextafter(self._NORMAL, 1),
+            ],
+            "single": [-self._MAX],
+            "ties": [self._MAX] * 5 + [-self._MAX] * 3 + [self._SUB] * 2,
+        }
+
+    def _df(self, spark):
+        rows = [(g, v) for g, xs in self._groups().items() for v in xs]
+        return spark.createDataFrame(rows, "g string, x double").repartition(5)
+
+    @staticmethod
+    def _bits(xs):
+        return [struct.pack("<d", x) for x in xs]
+
+    def test_twopass_matches_sorted_rank_selection(self, spark):
+        from hg_data_pipelines_spark.operators.scale import (
+            exact_quantiles_twopass,
+        )
+
+        out = exact_quantiles_twopass(self._df(spark), "g", "x", self._QS)
+        got = {r[0]: list(r[1:]) for r in out.collect()}
+        assert set(got) == set(self._groups())
+        for g, xs in self._groups().items():
+            xs, n = sorted(xs), len(xs)
+            want = [xs[max(1, min(math.ceil(q * n), n)) - 1] for q in self._QS]
+            assert self._bits(got[g]) == self._bits(want), (g, got[g], want)
+
+    def test_grouped_cont_matches_f_percentile(self, spark):
+        from hg_data_pipelines_spark.operators.scale import (
+            percentile_cont_exact_grouped,
+        )
+
+        df = self._df(spark)
+        ps = [0.0] + self._QS
+        ref = {
+            r["g"]: [r[f"p{i}"] for i in range(len(ps))]
+            for r in df.groupBy("g")
+            .agg(*[F.percentile("x", F.lit(p)).alias(f"p{i}") for i, p in enumerate(ps)])
+            .collect()
+        }
+        got = percentile_cont_exact_grouped(df, "g", "x", ps)
+        assert set(got) == set(ref) == set(self._groups())
+        for g in ref:
+            assert self._bits(got[g]) == self._bits(ref[g]), (g, got[g], ref[g])
 
 
 class TestPercentileContExact:
